@@ -21,6 +21,7 @@ config we would never deploy would be gaming the number.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -303,7 +304,10 @@ def main() -> None:
     from chyme_spark.session import get_spark
 
     registry = load_all()
-    spark = get_spark("chyme_bench")
+    # the session a block runs on: revive_if_dead() rebuilds THIS one,
+    # so a revival inside the low-core probe stays low-core
+    make_session = functools.partial(get_spark, "chyme_bench")
+    spark = make_session()
     names = [n for n in HEADLINE if n in registry]
 
     def run(name: str) -> None:
@@ -355,8 +359,10 @@ def main() -> None:
     # every later block (r9: the entire rotation battery) died with it.
     # revive_if_dead() rebuilds the session after a fatal member and the
     # per-member try/except keeps the block's other numbers.
+    revivals = 0
+
     def revive_if_dead() -> bool:
-        nonlocal spark
+        nonlocal spark, revivals
         try:
             dead = spark.sparkContext._jsc.sc().isStopped()
         except Exception:  # noqa: BLE001 — a dead gateway counts as dead
@@ -374,8 +380,14 @@ def main() -> None:
                 spark.stop()
             except Exception:  # noqa: BLE001 — best-effort teardown of a corpse
                 pass
-            spark = get_spark("chyme_bench")
+            spark = make_session()
+            revivals += 1
         return dead
+
+    def flag_revived(block: dict | None, since: int) -> None:
+        # numbers taken across a revival ran partly on a fresh JVM
+        if block is not None and revivals > since:
+            block["revived"] = True
 
     def run_at(name: str, d: str) -> float:
         t0 = time.time()
@@ -452,6 +464,7 @@ def main() -> None:
     # Runs BEFORE the scale probes so a probe OOM cannot sink it (r9).
     # Membership: module-scope ROTATION (guarded by test_bench_battery).
     rot_block = None
+    since = revivals
     if os.environ.get("SPARK_GRAFT_ROTATION", "1") != "0":
         rot_med, rot_errors = probe_block(
             [n for n in ROTATION if n in registry], sf_dir
@@ -463,6 +476,7 @@ def main() -> None:
         }
         if rot_errors:
             rot_block["errors"] = rot_errors
+    flag_revived(rot_block, since)
 
     # --- sf0.1 base medians for probe-only members (r10) ----------------
     # The sf1/sf2 ratios need a SAME-ROUND sf0.1 denominator. Headline
@@ -488,12 +502,14 @@ def main() -> None:
         os.environ.get("SPARK_GRAFT_SF1", "1") != "0"
         or os.environ.get("SPARK_GRAFT_SF2", "1") != "0"
     )
+    since = revivals
     if base_needed and probes_on:
         base_med, base_errors = probe_block(base_needed, sf_dir)
         probe_base.update(base_med)
         base_block = {"members": base_needed, "queries_median": base_med}
         if base_errors:
             base_block["errors"] = base_errors
+    flag_revived(base_block, since)
 
     # --- scale-cliff probe (VERDICT r5 item 6) --------------------------
     # The 2x gate at sf0.1 cannot see a cost curve that bends far above
@@ -504,6 +520,7 @@ def main() -> None:
     # membership: module-scope SF1_HEAVY (guarded by test_bench_battery)
     _CLIFF = 3.0  # flag when time ratio > _CLIFF * data ratio
     sf1_block = None
+    since = revivals
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and sf == "0.1":
         try:
             from chyme_spark.scaleup import ensure_scaled
@@ -535,6 +552,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — the probe must never sink the bench line
             sf1_block = {"error": f"{type(e).__name__}: {e}"}
             revive_if_dead()
+    flag_revived(sf1_block, since)
 
     # --- core-scaling pair at sf1 (VERDICT r15 #2) ----------------------
     # The driver's own 8-core re-run at sf0.1 cannot distinguish serial
@@ -547,7 +565,8 @@ def main() -> None:
     # dwarfs fixed overhead. Disable: SPARK_GRAFT_CORE_PROBE=0.
     core_block = None
     main_master = spark.sparkContext.master
-    main_shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    main_shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    since = revivals
     if (
         os.environ.get("SPARK_GRAFT_CORE_PROBE", "1") != "0"
         and sf1_block is not None
@@ -557,11 +576,13 @@ def main() -> None:
             high = spark.sparkContext.defaultParallelism
             low = max(2, high // 4)
             spark.stop()
-            spark = get_spark(
+            make_session = functools.partial(
+                get_spark,
                 "chyme_bench_lowcore",
                 master=f"local[{low}]",
                 extra_conf={"spark.sql.shuffle.partitions": str(low)},
             )
+            spark = make_session()
             low_med, low_errors = probe_block(
                 [n for n in CORE_SCALE if n in registry],
                 sf1_block["dir"],
@@ -594,7 +615,9 @@ def main() -> None:
                 spark.stop()
             except Exception:  # noqa: BLE001
                 pass
-            spark = get_spark("chyme_bench")
+            make_session = functools.partial(get_spark, "chyme_bench")
+            spark = make_session()
+    flag_revived(core_block, since)
 
     # --- 20x skew probe (VERDICT r7 #7) --------------------------------
     # The candidate-generation ops whose cost is most sensitive to
@@ -621,6 +644,7 @@ def main() -> None:
     # membership: module-scope SF2_SKEW (guarded by test_bench_battery)
     _CLIFF20 = 3.0
     sf2_block = None
+    since = revivals
     if os.environ.get("SPARK_GRAFT_SF2", "1") != "0" and sf == "0.1":
         try:
             from chyme_spark.scaleup import ensure_scaled
@@ -655,6 +679,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             sf2_block = {"error": f"{type(e).__name__}: {e}"}
             revive_if_dead()
+    flag_revived(sf2_block, since)
 
     calibration = _cpu_calibration()
     # calibration-normalized medians (VERDICT r6 #6): per-query median

@@ -19,6 +19,9 @@ Fixes baked in (SURVEY §2A quirks list):
 
 from __future__ import annotations
 
+import os
+
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -64,40 +67,6 @@ def split_malformed(catalog: DataFrame) -> tuple[DataFrame, DataFrame]:
     return catalog.filter(is_valid), catalog.filter(~is_valid)
 
 
-def list_files(spark, root: str, max_depth: int | None = None) -> DataFrame:
-    """Recursive object listing -> (url, size, mtime) DataFrame.
-
-    Parity with the reference's BFS lister (ref ``pkg/aws/s3.go:63-80``,
-    ``311-338``) including its ``--recursion`` depth bound — but with
-    correct pagination (Hadoop FS iterators page internally; the
-    reference dropped its ContinuationToken, ref ``pkg/aws/s3.go:344-356``).
-
-    Listing runs on the driver (it is metadata, same as Spark's own file
-    index); for buckets with millions of prefixes use
-    :func:`list_files_distributed`, which fans the per-prefix recursion
-    out to executors.
-    """
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = path.getFileSystem(conf)
-    # depth must be measured against the HADOOP-rendered path: the
-    # caller's 'file:///tmp/x' renders as 'file:/tmp/x' in results, and
-    # counting the raw root's slashes would loosen max_depth by 2
-    # (round-6 review)
-    base_depth = fs.makeQualified(path).toString().rstrip("/").count("/")
-    rows = []
-    it = fs.listFiles(path, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        if max_depth is not None and (p.count("/") - base_depth - 1) > max_depth:
-            continue
-        rows.append((p, st.getLen(), st.getModificationTime()))
-    return spark.createDataFrame(rows, "url string, size long, mtime long")
-
-
 def _resolve_fs(url: str, s3_options: dict | None = None):
     """(filesystem, path) for a URL; explicit ``s3_options`` (a dict of
     ``pyarrow.fs.S3FileSystem`` kwargs — endpoint_override, access_key,
@@ -107,82 +76,85 @@ def _resolve_fs(url: str, s3_options: dict | None = None):
     executor closures."""
     from urllib.parse import urlparse
 
-    from pyarrow import fs as pafs
-
     parsed = urlparse(url)
     if s3_options and parsed.scheme in ("s3", "s3a"):
         return pafs.S3FileSystem(**s3_options), f"{parsed.netloc}{parsed.path}".rstrip("/")
     return pafs.FileSystem.from_uri(url)
 
 
-def list_files_distributed(
-    spark, root: str, max_depth: int | None = None, fanout_partitions: int = 64,
-    s3_options: dict | None = None,
-) -> DataFrame:
-    """Recursive listing with the per-prefix recursion fanned out to
-    executors — same output as :func:`list_files`, driver does only the
-    first level.
+def open_listing(root: str, s3_options: dict | None = None):
+    """(filesystem, scheme, base path) for a listing root. A root with no
+    scheme is a local path, made absolute first as Hadoop would resolve
+    it against the working directory (pyarrow rejects relative file
+    URIs)."""
+    if "://" not in root:
+        root = "file://" + os.path.abspath(root)
+    fs, base = _resolve_fs(root, s3_options)
+    return fs, root.split("://", 1)[0], base.rstrip("/")
 
-    Parity with the reference's parallel per-prefix listing (ref
-    ``pkg/aws/s3.go:326-337`` — errgroup over prefixes); at 100 M
-    objects the driver-side iterator is the bottleneck, here the driver
-    touches one page of first-level entries and each executor recurses
-    one prefix. Uses ``pyarrow.fs`` rather than the Hadoop FS API
-    because executors' Python workers have no JVM gateway; both resolve
-    the same schemes for file/s3/hdfs. ``s3_options`` binds explicit
-    object-store credentials/endpoint into the executor closures (the
-    env chain is invisible to already-running Python workers).
-    """
-    import pandas as pd
-    from pyarrow import fs as pafs
 
-    scheme = root.split("://", 1)[0] if "://" in root else "file"
-    fs, base = _resolve_fs(root if "://" in root else f"file://{root}", s3_options)
-    base = base.rstrip("/")
+def _listed(scheme: str, info) -> bool:
+    # Hadoop's LocalFileSystem hides its checksum side files
+    # (`.<name>.crc`); the catalog never saw them, so neither do we
+    name = info.base_name
+    return info.type == pafs.FileType.File and not (
+        scheme == "file" and name.startswith(".") and name.endswith(".crc")
+    )
+
+
+def _row(scheme: str, info) -> tuple:
+    # some filesystems omit mtimes; FileInfo.mtime_ns is then None
+    mtime = info.mtime_ns // 1_000_000 if info.mtime_ns is not None else None
+    return (f"{scheme}://{info.path}", info.size, mtime)
+
+
+def list_top(fs, scheme: str, base: str, max_depth: int | None = None) -> tuple[list, list]:
+    """The root's own page: (file rows at depth 0, subdirectory paths,
+    none when ``max_depth`` < 1). A root that is one file lists as that
+    file."""
+    root = fs.get_file_info(base)
+    if root.type == pafs.FileType.File:
+        infos = [root]
+    else:
+        infos = fs.get_file_info(pafs.FileSelector(base))
+    rows = [_row(scheme, i) for i in infos if _listed(scheme, i)]
+    if max_depth is not None and max_depth < 1:
+        return rows, []
+    return rows, [i.path for i in infos if i.type == pafs.FileType.Directory]
+
+
+def walk(fs, scheme: str, base: str, dirs, max_depth: int | None = None):
+    """Yield (url, size, mtime) for every file under ``dirs`` — paths
+    of subdirectories of ``base`` — at most ``max_depth`` levels below
+    ``base`` (its own files are level 0). The recursion half of the
+    lister, shared by :func:`list_files` on the driver and the
+    ``chyme_listing`` source on executors."""
     base_depth = base.count("/")
+    for d in dirs:
+        for i in fs.get_file_info(pafs.FileSelector(d, recursive=True)):
+            if _listed(scheme, i) and (
+                max_depth is None or i.path.count("/") - base_depth - 1 <= max_depth
+            ):
+                yield _row(scheme, i)
 
-    top = fs.get_file_info(pafs.FileSelector(base, recursive=False))
-    dir_prefixes = [f"{scheme}://{i.path}" for i in top if i.type == pafs.FileType.Directory]
-    def _mtime_ms(info):
-        # some filesystems omit mtimes; FileInfo.mtime_ns is then None
-        return info.mtime_ns // 1_000_000 if info.mtime_ns is not None else None
 
-    top_files = [
-        (f"{scheme}://{i.path}", i.size, _mtime_ms(i))
-        for i in top
-        if i.type == pafs.FileType.File
-    ]
-    schema = "url string, size long, mtime long"
-    files_df = spark.createDataFrame(top_files, schema)
-    if not dir_prefixes:
-        return files_df
+def list_files(spark, root: str, max_depth: int | None = None) -> DataFrame:
+    """Recursive object listing -> (url, size, mtime) DataFrame.
 
-    def list_prefixes(batches):
-        # all prefixes share one scheme/credential config, so build the
-        # filesystem client once per worker instead of once per prefix
-        # (S3FileSystem setup is an aws-sdk client bootstrap — material
-        # when a batch carries thousands of prefixes)
-        cached_fs = None
-        for pdf in batches:
-            rows = []
-            for prefix in pdf["prefix"]:
-                if cached_fs is None:
-                    cached_fs, _ = _resolve_fs(prefix, s3_options)
-                pfs = cached_fs
-                ppath = prefix.split("://", 1)[1].rstrip("/")
-                for i in pfs.get_file_info(pafs.FileSelector(ppath, recursive=True)):
-                    if i.type != pafs.FileType.File:
-                        continue
-                    if max_depth is not None and (i.path.count("/") - base_depth - 1) > max_depth:
-                        continue
-                    rows.append((f"{scheme}://{i.path}", i.size, _mtime_ms(i)))
-            yield pd.DataFrame(rows, columns=["url", "size", "mtime"])
+    Parity with the reference's BFS lister (ref ``pkg/aws/s3.go:63-80``,
+    ``311-338``) including its ``--recursion`` depth bound — but with
+    correct pagination (pyarrow's filesystems page internally; the
+    reference dropped its ContinuationToken, ref ``pkg/aws/s3.go:344-356``).
 
-    prefixes = spark.createDataFrame(
-        [(p,) for p in dir_prefixes], "prefix string"
-    ).repartition(min(len(dir_prefixes), fanout_partitions))
-    deep = prefixes.mapInPandas(list_prefixes, schema)
-    return files_df.unionByName(deep)
+    The walk runs on the driver (it is metadata, same as Spark's own
+    file index). For buckets with millions of prefixes read the
+    ``chyme_listing`` source instead: it runs the same walk on
+    executors, one share of the top-level prefixes per partition.
+    """
+    fs, scheme, base = open_listing(root)
+    rows, dirs = list_top(fs, scheme, base, max_depth)
+    rows.extend(walk(fs, scheme, base, dirs, max_depth))
+    return spark.createDataFrame(rows, "url string, size long, mtime long")
 
 
 def ingest(urls: DataFrame, filter_string: str = "identity/") -> DataFrame:

@@ -120,7 +120,6 @@ def _ingest_once(
     from chyme_spark.catalog import (
         ingest,
         list_files,
-        list_files_distributed,
         split_malformed,
         with_resource_columns,
     )
@@ -129,15 +128,22 @@ def _ingest_once(
     # building the Column requires an active session, so validate
     # after get_spark — but before any data is touched
     compile_filter(filter_string)
-    if "://" in root and not root.startswith("file://") and not distributed_listing:
+    if distributed_listing:
+        # the same walk as list_files, run on executors by the
+        # chyme_listing source
+        from chyme_spark.sources import register_listing_source
+
+        register_listing_source(spark)
+        rd = spark.read.format("chyme_listing").option("path", root)
+        if recursion is not None:
+            rd = rd.option("depth", str(recursion))
+        urls = rd.load().select("url")
+    elif "://" in root and not root.startswith("file://"):
         # remote URL without a listing mode = the reference's
-        # single-object ingest path; --distributed-listing opts a bucket
-        # prefix into the executor-fanned lister instead (previously the
-        # flag was silently ignored here — round-6 review)
+        # single-object ingest path
         urls = spark.createDataFrame([(root,)], "url string")
     else:
-        lister = list_files_distributed if distributed_listing else list_files
-        urls = lister(spark, root, recursion).select("url")
+        urls = list_files(spark, root, recursion).select("url")
     # cache the listing: consumed by both the catalog branch and the
     # quarantine branch below — one listing pass, not two
     urls = urls.cache()
@@ -595,6 +601,12 @@ def cmd_ls(args) -> int:
     return 0
 
 
+_DISTRIBUTED_LISTING_HELP = (
+    "list a remote prefix (or local root) on executors through the "
+    "chyme_listing source; without it a remote URL is treated as one object"
+)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="chyme-spark", description=__doc__)
     sub = ap.add_subparsers(dest="verb", required=True)
@@ -606,7 +618,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--catalog", default=None,
                    help="catalog parquet dir (required unless --server)")
     p.add_argument("--distributed-listing", action="store_true",
-                   help="fan per-prefix recursion out to executors (large buckets)")
+                   help=_DISTRIBUTED_LISTING_HELP)
     p.add_argument("--follow", action="store_true",
                    help="streaming ingest: watch root for new arrivals (exactly-once)")
     p.add_argument("--follow-interval", default=None, metavar="'20 seconds'",
@@ -634,7 +646,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--host", default="127.0.0.1")
     p.add_argument("--port", type=int, default=8080,
                    help="8080 matches the reference default (cmd/ingest.go:55)")
-    p.add_argument("--distributed-listing", action="store_true")
+    p.add_argument("--distributed-listing", action="store_true",
+                   help=_DISTRIBUTED_LISTING_HELP)
     p.add_argument("--serve-duration", type=float, default=None, metavar="SEC",
                    help="shut down after SEC seconds (tests/bounded runs)")
     p.set_defaults(fn=cmd_serve)

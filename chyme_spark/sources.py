@@ -139,8 +139,9 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 # lister + errgroup per-prefix fan-out (ref pkg/aws/s3.go:63-80, 311-338)
 # becomes `spark.read.format("chyme_listing").options(...)` — planning
 # (one driver page of top-level entries -> InputPartitions), execution
-# (per-prefix recursion on executors), and schema all inside Spark's own
-# source machinery instead of a hand-rolled helper.
+# (catalog.walk over each partition's prefixes on executors), and schema
+# all inside Spark's own source machinery. The driver-side
+# catalog.list_files runs the same page and the same walk.
 # ---------------------------------------------------------------------------
 
 try:  # Python Data Source API needs pyspark >= 4.0
@@ -151,10 +152,15 @@ try:  # Python Data Source API needs pyspark >= 4.0
         SimpleDataSourceStreamReader,
     )
 
-    class _PrefixPartition(InputPartition):
-        def __init__(self, prefix: str, is_file: bool):
-            self.prefix = prefix
-            self.is_file = is_file
+    # the default of the retired per-prefix fan-out: enough tasks to
+    # spread a wide bucket over a cluster, few enough that each task's
+    # fixed cost stays small next to its listing
+    _MAX_LISTING_PARTITIONS = 64
+
+    class _ListingPartition(InputPartition):
+        def __init__(self, dirs: list, rows: list):
+            self.dirs = dirs  # subdirectory paths the executor walks
+            self.rows = rows  # top-level file rows the driver already listed
 
     def _s3_opts_from(options: dict) -> dict:
         """Extract ``s3.<key>`` reader options into S3FileSystem kwargs
@@ -172,12 +178,23 @@ try:  # Python Data Source API needs pyspark >= 4.0
         return _resolve_fs(root, s3_opts)
 
     class ListingReader(DataSourceReader):
+        """Batch face of the lister. :meth:`partitions` lists the root's
+        own page on the driver (``catalog.list_top``): its file rows
+        travel in one partition, and its subdirectories are dealt into
+        at most ``_MAX_LISTING_PARTITIONS`` partitions, which
+        :meth:`read` walks on executors with ``catalog.walk`` — the
+        walk ``catalog.list_files`` runs on the driver."""
+
         def __init__(self, options: dict):
-            self.root = options.get("path") or options.get("root")
-            if not self.root:
+            from chyme_spark.catalog import open_listing
+
+            root = options.get("path") or options.get("root")
+            if not root:
                 raise ValueError("chyme_listing requires option 'path'")
             self.max_depth = int(options["depth"]) if options.get("depth") else None
-            self.s3_opts = _s3_opts_from(options)
+            # opened on the driver's node, so a relative root resolves
+            # there; the filesystem pickles into every read task
+            self.fs, self.scheme, self.base = open_listing(root, _s3_opts_from(options))
             self.url_prefixes: list[str] = []
 
         def pushFilters(self, filters):
@@ -200,63 +217,34 @@ try:  # Python Data Source API needs pyspark >= 4.0
                 else:
                     yield f
 
-        def _subtree_may_match(self, url: str, is_file: bool) -> bool:
+        def _subtree_may_match(self, url: str) -> bool:
             # pushed prefixes are ANDed: every prefix must be compatible
-            # with this entry's subtree (entry under prefix, or prefix
-            # deeper inside this directory's subtree)
-            for p in self.url_prefixes:
-                if not (url.startswith(p) or (not is_file and p.startswith(url))):
-                    return False
-            return True
-
-        def partitions(self):
-            # driver touches ONE non-recursive page (the reference's
-            # first ListObjectsV2 call); every subtree becomes its own
-            # input partition so recursion runs on executors
-            from pyarrow import fs as pafs
-
-            root = self.root if "://" in self.root else f"file://{self.root}"
-            fs, base = _fs_for(root, self.s3_opts)
-            infos = fs.get_file_info(pafs.FileSelector(base.rstrip("/"), recursive=False))
-            scheme = root.split("://", 1)[0]
-            parts = [
-                _PrefixPartition(f"{scheme}://{i.path}", i.type == pafs.FileType.File)
-                for i in infos
-                if i.type in (pafs.FileType.File, pafs.FileType.Directory)
-                and self._subtree_may_match(
-                    f"{scheme}://{i.path}", i.type == pafs.FileType.File
-                )
-            ]
-            return parts or [_PrefixPartition(root, False)]
+            # with this directory's subtree (directory under prefix, or
+            # prefix deeper inside the directory)
+            return all(url.startswith(p) or p.startswith(url) for p in self.url_prefixes)
 
         def _url_passes(self, url: str) -> bool:
             return all(url.startswith(p) for p in self.url_prefixes)
 
+        def partitions(self):
+            from chyme_spark.catalog import list_top
+
+            rows, dirs = list_top(self.fs, self.scheme, self.base, self.max_depth)
+            rows = [r for r in rows if self._url_passes(r[0])]
+            dirs = [d for d in dirs if self._subtree_may_match(f"{self.scheme}://{d}")]
+            n = min(len(dirs), _MAX_LISTING_PARTITIONS)
+            parts = [_ListingPartition(dirs[i::n], []) for i in range(n)]
+            if rows or not parts:
+                parts.append(_ListingPartition([], rows))
+            return parts
+
         def read(self, partition):
-            from pyarrow import fs as pafs
+            from chyme_spark.catalog import walk
 
-            root = self.root if "://" in self.root else f"file://{self.root}"
-            scheme = root.split("://", 1)[0]
-            base_depth = root.split("://", 1)[1].rstrip("/").count("/")
-
-            def mtime_ms(i):
-                return i.mtime_ns // 1_000_000 if i.mtime_ns is not None else None
-
-            fs, path = _fs_for(partition.prefix, self.s3_opts)
-            if partition.is_file:
-                if self._url_passes(partition.prefix):
-                    info = fs.get_file_info(path)
-                    yield (partition.prefix, info.size, mtime_ms(info))
-                return
-            for i in fs.get_file_info(pafs.FileSelector(path, recursive=True)):
-                if i.type != pafs.FileType.File:
-                    continue
-                depth = i.path.count("/") - base_depth - 1
-                if self.max_depth is not None and depth > self.max_depth:
-                    continue
-                url = f"{scheme}://{i.path}"
-                if self._url_passes(url):
-                    yield (url, i.size, mtime_ms(i))
+            yield from partition.rows
+            for row in walk(self.fs, self.scheme, self.base, partition.dirs, self.max_depth):
+                if self._url_passes(row[0]):
+                    yield row
 
     class ListingStreamReader(SimpleDataSourceStreamReader):
         """Streaming face of the lister: each micro-batch emits the

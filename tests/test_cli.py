@@ -137,6 +137,29 @@ def test_ingest_bad_filter_clean_error(spark, tmp_path, capsys):
     assert "unknown filter" in capsys.readouterr().err
 
 
+def test_ingest_distributed_listing_catalogs_same_rows(spark, tmp_path):
+    """--distributed-listing (the chyme_listing source on executors) and
+    plain ingest (list_files on the driver) catalog the same rows, with
+    and without a --recursion bound."""
+    src = tmp_path / "media"
+    for rel, body in {
+        "a.mov": b"A", "top.log": b"z", "x/b.mp4": b"BB",
+        "x/y/c.mov": b"CCC", "z/d.mov": b"D",
+    }.items():
+        (src / rel).parent.mkdir(parents=True, exist_ok=True)
+        (src / rel).write_bytes(body)
+    for extra in ([], ["--recursion", "1"]):
+        cats = {}
+        for mode in ("plain", "distributed"):
+            cat = str(tmp_path / f"{mode}{len(extra)}")
+            flags = ["--distributed-listing"] if mode == "distributed" else []
+            args = ["ingest", str(src), "--filter", "ext/mov/mp4", "--catalog", cat]
+            assert cli.main(args + extra + flags) == 0
+            cats[mode] = {tuple(r) for r in spark.read.parquet(cat).collect()}
+        assert cats["distributed"] == cats["plain"], extra
+        assert len(cats["plain"]) == (4 if not extra else 3), extra
+
+
 def test_status_verb(spark, tmp_path, capsys):
     t = tmp_path / "tables"
     src = tmp_path / "m"

@@ -114,18 +114,27 @@ def test_arrowfs_loader_roundtrip_multipart(s3, tmp_path):
     assert not loader.exists(f"s3://{BUCKET}/rt/out/big.bin")
 
 
+def _listing(spark, root: str, opts: dict):
+    """The chyme_listing source over an object-store root, with explicit
+    credentials/endpoint as ``s3.<key>`` options (no env dependence)."""
+    from chyme_spark.sources import register_listing_source
+
+    register_listing_source(spark)
+    rd = spark.read.format("chyme_listing").option("path", root)
+    for k, v in opts.items():
+        rd = rd.option(f"s3.{k}", v)
+    return rd.load()
+
+
 def test_distributed_listing_over_s3(s3, spark):
-    """list_files_distributed fans per-prefix recursion to executors
-    with explicit credentials in the closure (no env dependence)."""
+    """The chyme_listing source walks each prefix on executors with
+    explicit credentials in the pickled filesystem."""
     _endpoint, client, opts = s3
     objects = _seed_media(client)
-    from chyme_spark.catalog import list_files_distributed
 
     rows = {
         r["url"]: r["size"]
-        for r in list_files_distributed(
-            spark, f"s3://{BUCKET}/media", s3_options=opts
-        ).collect()
+        for r in _listing(spark, f"s3://{BUCKET}/media", opts).collect()
     }
     expected = {f"s3://{BUCKET}/{k}": len(v) for k, v in objects.items()}
     assert rows == expected
@@ -139,12 +148,12 @@ def test_pipeline_over_s3_objects(s3, spark, tmp_path):
     metadata, and idempotent re-run."""
     _endpoint, client, opts = s3
     _seed_media(client)
-    from chyme_spark.catalog import ingest, list_files_distributed
+    from chyme_spark.catalog import ingest
     from chyme_spark.runner import loaders_with_credentials, run_tasks
     from chyme_spark.tasker import create_tasks
     from chyme_spark.templates import DEFAULT_TEMPLATES, with_overrides
 
-    urls = list_files_distributed(spark, f"s3://{BUCKET}/media", s3_options=opts).select("url")
+    urls = _listing(spark, f"s3://{BUCKET}/media", opts).select("url")
     catalog = ingest(urls, "ext/mov/mp4")
     assert catalog.count() == 3  # skip.log filtered out
 

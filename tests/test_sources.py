@@ -56,36 +56,74 @@ def test_json_quarantine_captures_malformed(spark, tmp_path):
     assert empty_bad.unionByName(bad).count() == 1
 
 
-def _norm(url: str) -> str:
-    # Hadoop renders local URLs as file:/x, pyarrow-based listing as file:///x
-    import re
-    return re.sub(r"^([a-z][a-z0-9+.-]*):/+", r"\1:///", url)
+def _deep_tree(tmp_path):
+    root = tmp_path / "tree"
+    for rel in ["a/b/c", "a/d", "e"]:
+        (root / rel).mkdir(parents=True, exist_ok=True)
+    for rel, size in {
+        "top.txt": 3, "a/one.txt": 5, "a/b/two.txt": 7,
+        "a/b/c/three.txt": 11, "a/d/four.txt": 13, "e/five.txt": 17,
+        # a Hadoop checksum side file: hidden from every listing
+        "a/.x.mov.crc": 19,
+    }.items():
+        (root / rel).write_bytes(b"x" * size)
+    return root
+
+
+def _expected(root, depth=None) -> set:
+    """(url, size, mtime ms) of every non-checksum file at most `depth`
+    levels below `root`, straight from os.walk."""
+    import os
+
+    out = set()
+    for d, _subdirs, names in os.walk(root):
+        level = os.path.relpath(d, root).count(os.sep) + (d != str(root))
+        for n in names:
+            if (depth is not None and level > depth) or (n.startswith(".") and n.endswith(".crc")):
+                continue
+            st = os.stat(os.path.join(d, n))
+            out.add((f"file://{d}/{n}", st.st_size, st.st_mtime_ns // 1_000_000))
+    return out
 
 
 def test_distributed_listing_matches_driver_listing(spark, tmp_path):
-    """list_files_distributed must produce the identical (url,size,mtime)
-    set as the driver-side lister over a deep tree, incl. depth bound."""
-    from chyme_spark.catalog import list_files, list_files_distributed
+    """list_files (driver) and the chyme_listing source (executors) run
+    one walk: both must list exactly the expected files for every depth
+    bound and root form — plain, file:// and relative roots, a root
+    that is a single file — and hide `.<name>.crc` checksum files, as
+    Hadoop's local filesystem did."""
+    import os
 
-    root = tmp_path / "tree"
-    for rel in ["a/b/c", "a/d", "e", ""]:
-        (root / rel).mkdir(parents=True, exist_ok=True)
-    files = {
-        "top.txt": 3, "a/one.txt": 5, "a/b/two.txt": 7,
-        "a/b/c/three.txt": 11, "a/d/four.txt": 13, "e/five.txt": 17,
-    }
-    for rel, size in files.items():
-        (root / rel).write_bytes(b"x" * size)
+    from chyme_spark.catalog import list_files
+    from chyme_spark.sources import register_listing_source
+
+    root = _deep_tree(tmp_path)
+    # relative to the working directory the session (and its Python
+    # workers) started in
+    rel = os.path.relpath(root)
+    register_listing_source(spark)
+
+    def source(_spark, r, depth):
+        rd = spark.read.format("chyme_listing").option("path", r)
+        if depth is not None:
+            rd = rd.option("depth", str(depth))
+        return rd.load()
 
     for depth in (None, 0, 1, 2):
-        drv = {(_norm(r.url), r.size, r.mtime)
-               for r in list_files(spark, str(root), depth).collect()}
-        dist = {(_norm(r.url), r.size, r.mtime)
-                for r in list_files_distributed(spark, str(root), depth).collect()}
-        assert dist == drv, f"depth={depth}"
-    full = {(_norm(r.url), r.size, r.mtime)
-            for r in list_files_distributed(spark, str(root)).collect()}
-    assert {u.rsplit("/", 1)[-1] for u, _s, _m in full} == {f.rsplit("/", 1)[-1] for f in files}
+        want = _expected(root, depth)
+        for r in (str(root), f"file://{root}", rel):
+            for lister in (list_files, source):
+                got = {tuple(row) for row in lister(spark, r, depth).collect()}
+                assert got == want, (lister, r, depth)
+    assert {u.rsplit("/", 1)[-1] for u, _s, _m in _expected(root)} == {
+        "top.txt", "one.txt", "two.txt", "three.txt", "four.txt", "five.txt",
+    }
+
+    one = root / "a" / "b" / "two.txt"
+    want = {(f"file://{one}", 7, one.stat().st_mtime_ns // 1_000_000)}
+    for r in (str(one), f"file://{one}", f"{rel}/a/b/two.txt"):
+        for lister in (list_files, source):
+            assert {tuple(row) for row in lister(spark, r, None).collect()} == want, (lister, r)
 
 
 def test_listing_datasource_matches_driver_listing(spark, tmp_path):
@@ -107,13 +145,35 @@ def test_listing_datasource_matches_driver_listing(spark, tmp_path):
         rd = spark.read.format("chyme_listing").option("path", str(root))
         if depth is not None:
             rd = rd.option("depth", str(depth))
-        ds = {(_norm(r.url), r.size, r.mtime) for r in rd.load().collect()}
-        drv = {(_norm(r.url), r.size, r.mtime)
-               for r in list_files(spark, str(root), depth).collect()}
+        ds = {tuple(r) for r in rd.load().collect()}
+        drv = {tuple(r) for r in list_files(spark, str(root), depth).collect()}
         assert ds == drv, f"depth={depth}"
-    # the source plans one partition per top-level entry (executor fan-out)
+    # one partition per subdirectory (a, c) plus one for the top-level files
     df = spark.read.format("chyme_listing").option("path", str(root)).load()
-    assert df.rdd.getNumPartitions() >= 3
+    assert df.rdd.getNumPartitions() == 3
+
+
+def test_listing_source_deals_prefixes_into_partitions(tmp_path):
+    """Planning: top-level files ride in ONE partition (the driver has
+    already listed them) and subdirectories are dealt over at most 64
+    partitions — not one Spark task per top-level entry."""
+    from chyme_spark.sources import ListingReader
+
+    root = tmp_path / "wide"
+    for i in range(3):
+        (root / f"d{i}").mkdir(parents=True)
+        (root / f"d{i}" / "f.bin").write_bytes(b"x")
+    for i in range(40):
+        (root / f"f{i}.bin").write_bytes(b"x")
+    parts = ListingReader({"path": str(root)}).partitions()
+    assert len(parts) == 4
+    assert sorted(len(p.rows) for p in parts) == [0, 0, 0, 40]
+    assert sorted(d for p in parts for d in p.dirs) == [f"{root}/d{i}" for i in range(3)]
+
+    for i in range(3, 100):
+        (root / f"d{i}").mkdir()
+    parts = ListingReader({"path": str(root)}).partitions()
+    assert len(parts) == 65 and sum(len(p.dirs) for p in parts) == 100
 
 
 def test_listing_stream_reader_skips_unchanged_dirs(tmp_path):
@@ -311,7 +371,7 @@ def test_listing_pushdown_prunes_subtrees_and_matches(spark, tmp_path):
     prefix = f"file://{root}/a"
     leftover = list(r.pushFilters([StringStartsWith(("url",), prefix)]))
     assert leftover == []  # consumed: enforced natively
-    assert [p.prefix for p in r.partitions()] == [prefix]
+    assert [(p.dirs, p.rows) for p in r.partitions()] == [([f"{root}/a"], [])]
 
     # unsupported filters are yielded back to Spark untouched
     r2 = ListingReader({"path": str(root)})

@@ -67,8 +67,13 @@ def build(src: str, out: str, variant: str, repeats: int, factor: int) -> None:
     os.makedirs(out, exist_ok=True)
     for t in TABLES:
         link = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(link):
-            os.symlink(os.path.join(src, f"{t}.parquet"), link)
+        target = os.path.join(src, f"{t}.parquet")
+        # a link left by an earlier --src (even a dangling one) is
+        # re-pointed, not kept
+        if os.path.islink(link) and os.readlink(link) != target:
+            os.remove(link)
+        if not os.path.lexists(link):
+            os.symlink(target, link)
 
     tbl = pq.read_table(os.path.join(src, "documents.parquet"))
     rows = tbl.to_pylist()
