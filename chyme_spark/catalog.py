@@ -21,8 +21,9 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyarrow import fs as pafs
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from chyme_spark.filters import compile_filter
@@ -34,6 +35,8 @@ from chyme_spark.filters import compile_filter
 _SCHEME_RE = r"^([a-z][a-z0-9+.-]*)://"
 _BUCKET_RE = r"^[a-z][a-z0-9+.-]*://([^/]*)/"
 _KEY_RE = r"^[a-z][a-z0-9+.-]*://[^/]*/(.+)$"
+# list_files' rows; mtime is epoch milliseconds
+_LISTING_SCHEMA = pa.schema([("url", pa.string()), ("size", pa.int64()), ("mtime", pa.int64())])
 
 
 def with_resource_columns(urls: DataFrame, phony: bool = False) -> DataFrame:
@@ -54,16 +57,18 @@ def with_resource_columns(urls: DataFrame, phony: bool = False) -> DataFrame:
     )
 
 
-def split_malformed(catalog: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(well-formed, quarantine) — needs a scheme and a non-empty key.
+def well_formed() -> Column:
+    """True for an annotated row with a scheme and a non-empty key; never
+    NULL. NULL urls yield NULL predicates, and a plain filter/~filter
+    pair drops NULL rows from BOTH outputs — the exact silent-vanish
+    :func:`split_malformed` exists to prevent; coalesce pins them to
+    quarantine (round-6 review)."""
+    return F.coalesce((F.col("scheme") != "") & (F.col("key") != ""), F.lit(False))
 
-    NULL urls yield NULL predicates, and a plain filter/~filter pair
-    drops NULL rows from BOTH outputs — the exact silent-vanish this
-    function exists to prevent; coalesce pins them to quarantine
-    (round-6 review)."""
-    is_valid = F.coalesce(
-        (F.col("scheme") != "") & (F.col("key") != ""), F.lit(False)
-    )
+
+def split_malformed(catalog: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(well-formed, quarantine) — needs a scheme and a non-empty key."""
+    is_valid = well_formed()
     return catalog.filter(is_valid), catalog.filter(~is_valid)
 
 
@@ -139,7 +144,7 @@ def walk(fs, scheme: str, base: str, dirs, max_depth: int | None = None):
 
 
 def list_files(spark, root: str, max_depth: int | None = None) -> DataFrame:
-    """Recursive object listing -> (url, size, mtime) DataFrame.
+    """Recursive object listing -> (url, size, mtime) local relation.
 
     Parity with the reference's BFS lister (ref ``pkg/aws/s3.go:63-80``,
     ``311-338``) including its ``--recursion`` depth bound — but with
@@ -147,14 +152,20 @@ def list_files(spark, root: str, max_depth: int | None = None) -> DataFrame:
     reference dropped its ContinuationToken, ref ``pkg/aws/s3.go:344-356``).
 
     The walk runs on the driver (it is metadata, same as Spark's own
-    file index). For buckets with millions of prefixes read the
-    ``chyme_listing`` source instead: it runs the same walk on
-    executors, one share of the top-level prefixes per partition.
+    file index), and its rows reach Spark as one Arrow table: the plan
+    is a ``LocalTableScan``, so a scan of the listing starts no Python
+    worker (a list of tuples would be a pickled Python RDD). An empty
+    root gives zero rows with the same schema. For buckets with
+    millions of prefixes read the ``chyme_listing`` source instead: it
+    runs the same walk on executors, one share of the top-level
+    prefixes per partition.
     """
     fs, scheme, base = open_listing(root)
     rows, dirs = list_top(fs, scheme, base, max_depth)
     rows.extend(walk(fs, scheme, base, dirs, max_depth))
-    return spark.createDataFrame(rows, "url string, size long, mtime long")
+    columns = list(zip(*rows)) or [()] * len(_LISTING_SCHEMA)
+    arrays = [pa.array(c, f.type) for c, f in zip(columns, _LISTING_SCHEMA)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=_LISTING_SCHEMA))
 
 
 def ingest(urls: DataFrame, filter_string: str = "identity/") -> DataFrame:

@@ -18,6 +18,7 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from chyme_spark.session import get_spark
@@ -37,6 +38,24 @@ def _read_ledger_or_none(spark, path: str):
     one-row-per-task semantics (ADVICE r2)."""
     df = _read_or_none(spark, path)
     return None if df is None else df.dropDuplicates(["task_hash"])
+
+
+def _not_in_ledger(spark, tasks, ledger_path: str):
+    """``tasks`` less the ones the ledger records as completed; with no
+    ledger yet there is nothing to join against."""
+    ledger = _read_ledger_or_none(spark, ledger_path)
+    if ledger is None:
+        return tasks
+    return tasks.join(ledger.select("task_hash"), "task_hash", "left_anti")
+
+
+def _append_counted(df, path: str) -> int:
+    """Append ``df`` to the parquet table at ``path``; returns the rows
+    written, counted by the write job itself (an observed metric), so
+    the rows are computed once and never cached."""
+    written = Observation()
+    df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(path)
+    return written.get["n"]
 
 
 def _ingest_follow(spark, args) -> int:
@@ -75,10 +94,7 @@ def _ingest_follow(spark, args) -> int:
         existing = _read_or_none(spark, args.catalog)
         if existing is not None:
             catalog = catalog.join(existing.select("url"), "url", "left_anti")
-        catalog = catalog.cache()
-        counts["n"] += catalog.count()
-        catalog.write.mode("append").parquet(args.catalog)
-        catalog.unpersist()
+        counts["n"] += _append_counted(catalog, args.catalog)
 
     ckpt = args.follow_checkpoint or f"{args.catalog.rstrip('/')}_stream_ckpt"
     writer = (
@@ -117,17 +133,12 @@ def _ingest_once(
 
     Raises ValueError on a bad filter string — callers map it to their
     transport's error convention (exit code 2 / response err field)."""
-    from chyme_spark.catalog import (
-        ingest,
-        list_files,
-        split_malformed,
-        with_resource_columns,
-    )
+    from chyme_spark.catalog import list_files, well_formed, with_resource_columns
     from chyme_spark.filters import compile_filter
 
     # building the Column requires an active session, so validate
     # after get_spark — but before any data is touched
-    compile_filter(filter_string)
+    wanted = compile_filter(filter_string)
     if distributed_listing:
         # the same walk as list_files, run on executors by the
         # chyme_listing source
@@ -144,33 +155,25 @@ def _ingest_once(
         urls = spark.createDataFrame([(root,)], "url string")
     else:
         urls = list_files(spark, root, recursion).select("url")
-    # cache the listing: consumed by both the catalog branch and the
-    # quarantine branch below — one listing pass, not two
-    urls = urls.cache()
-    catalog = None
-    try:
-        catalog = ingest(urls, filter_string)
-        # dedup against what's already cataloged (idempotent re-ingest)
-        existing = _read_or_none(spark, catalog_path)
-        if existing is not None:
-            catalog = catalog.join(existing.select("url"), "url", "left_anti")
-        # cache: count + write would otherwise execute listing+filter+dedup
-        # twice (2x a full scan at scale — VERDICT r1). The cached rows are
-        # catalog metadata (url/hash/ext), bounded, never the objects.
-        catalog = catalog.cache()
-        n = catalog.count()
-        catalog.write.mode("append").parquet(catalog_path)
-        _, quarantine = split_malformed(with_resource_columns(urls))
-        nq = quarantine.count()
-        return n, nq
-    finally:
-        # the `serve` loop calls this in a LONG-LIVED driver and maps
-        # failures to an HTTP err body — without the finally, every
-        # failed request would pin its cached DataFrames until process
-        # death (cache leak found in the round-6 review)
-        if catalog is not None and catalog.is_cached:
-            catalog.unpersist()
-        urls.unpersist()
+    # catalog.ingest's rows (well-formed, wanted, one per url, not yet
+    # cataloged), from ONE pass over the listing: the write job counts
+    # the appended rows and the malformed ones, so nothing is cached and
+    # no second job re-lists. The malformed rows ride along through the
+    # dedup and the anti-join (neither can drop one: a url is malformed
+    # or not as a whole, and the catalog holds none) to be counted in
+    # the write's final stage — an observed metric below a shuffle is
+    # lost when adaptive execution replaces that shuffle's empty output
+    # (nothing wanted, say) with an empty relation.
+    ok = well_formed()
+    rows = with_resource_columns(urls).filter(wanted | ~ok).dropDuplicates(["url"])
+    # dedup against what's already cataloged (idempotent re-ingest)
+    existing = _read_or_none(spark, catalog_path)
+    if existing is not None:
+        rows = rows.join(existing.select("url"), "url", "left_anti")
+    malformed = Observation()
+    rows = rows.observe(malformed, F.count_if(~ok).alias("n"))
+    n = _append_counted(rows.filter(ok), catalog_path)
+    return n, malformed.get["n"]
 
 
 def cmd_ingest(args) -> int:
@@ -261,12 +264,13 @@ def cmd_serve(args) -> int:
 
 
 def cmd_tasker(args) -> int:
-    from chyme_spark.tasker import create_tasks, empty_ledger
+    from chyme_spark.tasker import create_tasks
     from chyme_spark.templates import DEFAULT_TEMPLATES, with_overrides
 
     spark = get_spark("chyme_tasker")
     catalog = spark.read.parquet(args.catalog)
-    ledger = _read_ledger_or_none(spark, args.ledger) or empty_ledger(spark)
+    # None before the first worker run: create_tasks then skips the join
+    ledger = _read_ledger_or_none(spark, args.ledger)
     templates = with_overrides(
         DEFAULT_TEMPLATES, mirror_base=args.mirror_base, executor=args.executor, cmd=args.cmd
     )
@@ -277,11 +281,7 @@ def cmd_tasker(args) -> int:
     pending = _read_or_none(spark, args.tasks)
     if pending is not None:
         tasks = tasks.join(pending.select("task_hash"), "task_hash", "left_anti")
-    # cache: count + write would execute the template fan-out twice (VERDICT r1)
-    tasks = tasks.cache()
-    n = tasks.count()
-    tasks.write.mode("append").parquet(args.tasks)
-    tasks.unpersist()
+    n = _append_counted(tasks, args.tasks)
     print(f"created {n} tasks -> {args.tasks}")
     return 0
 
@@ -292,7 +292,12 @@ def _worker_batch(spark, args, todo) -> tuple[int, int]:
 
     if args.parallelism:
         todo = todo.repartition(args.parallelism)
-    results = run_tasks(todo, checkpoint_dir=args.checkpoint_dir).cache()
+    # Materialize the results once, with no lineage back to the ledger:
+    # the ledger append below makes Spark refresh every cached plan that
+    # reads the ledger's path, `todo` (its anti-join) included. A cache()
+    # here was dropped by that refresh, and the quarantine write then ran
+    # every failing task's payload a second time.
+    results = run_tasks(todo, checkpoint_dir=args.checkpoint_dir).localCheckpoint(eager=True)
     done = results.filter(F.col("ok")).select(
         "task_hash", "stage", F.current_timestamp().alias("completed_at")
     )
@@ -300,7 +305,7 @@ def _worker_batch(spark, args, todo) -> tuple[int, int]:
         "task_hash", F.col("error"), F.current_timestamp().alias("failed_at"),
         F.col("stage").alias("failed_stage"),
     )
-    n_ok, n_fail = done.count(), failed.count()
+    n_ok, n_fail = results.agg(F.count_if("ok"), F.count_if(~F.col("ok"))).first()
     done.write.mode("append").parquet(args.ledger)
     if n_fail:
         # idempotent under stream-batch replay (ADVICE r2): a crash
@@ -313,7 +318,6 @@ def _worker_batch(spark, args, todo) -> tuple[int, int]:
         if existing is not None:
             failed = failed.join(existing.select("task_hash"), "task_hash", "left_anti")
         failed.write.mode("append").parquet(args.quarantine)
-    results.unpersist()
     return n_ok, n_fail
 
 
@@ -336,8 +340,6 @@ def _worker_follow(spark, args) -> int:
     newly appended files until interrupted (or ``--follow-duration``
     elapses, for tests and bounded runs).
     """
-    from chyme_spark.tasker import empty_ledger
-
     # the long-poll worker may start BEFORE the first tasker run — wait
     # for the tasks table like the reference polls an empty queue,
     # instead of dying on PATH_NOT_FOUND (round-6 review). Bounded by
@@ -359,9 +361,7 @@ def _worker_follow(spark, args) -> int:
     counts = {"ok": 0, "fail": 0}
 
     def process(batch_df, _batch_id: int) -> None:
-        ledger = _read_ledger_or_none(spark, args.ledger) or empty_ledger(spark)
-        todo = batch_df.join(ledger.select("task_hash"), "task_hash", "left_anti")
-        n_ok, n_fail = _worker_batch(spark, args, todo)
+        n_ok, n_fail = _worker_batch(spark, args, _not_in_ledger(spark, batch_df, args.ledger))
         counts["ok"] += n_ok
         counts["fail"] += n_fail
 
@@ -390,14 +390,10 @@ def _worker_follow(spark, args) -> int:
 
 
 def cmd_worker(args) -> int:
-    from chyme_spark.tasker import empty_ledger
-
     spark = get_spark("chyme_worker")
     if getattr(args, "follow", False):
         return _worker_follow(spark, args)
-    tasks = spark.read.parquet(args.tasks)
-    ledger = _read_ledger_or_none(spark, args.ledger) or empty_ledger(spark)
-    todo = tasks.join(ledger.select("task_hash"), "task_hash", "left_anti")
+    todo = _not_in_ledger(spark, spark.read.parquet(args.tasks), args.ledger)
     n_ok, n_fail = _worker_batch(spark, args, todo)
     print(f"completed {n_ok} tasks; quarantined {n_fail}")
     return 0

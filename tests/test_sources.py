@@ -298,6 +298,32 @@ def test_list_files_depth_bound_uri_and_plain_roots(spark, tmp_path):
         assert names1 == {"top.mov", "mid.mov"}, r
 
 
+def test_list_files_empty_root_keeps_schema(spark, tmp_path):
+    """An empty root lists as zero rows with the listing's columns."""
+    from chyme_spark.catalog import list_files
+
+    (tmp_path / "empty").mkdir()
+    df = list_files(spark, str(tmp_path / "empty"))
+    assert df.count() == 0
+    assert df.schema.simpleString() == "struct<url:string,size:bigint,mtime:bigint>"
+
+
+def test_list_files_is_a_local_relation(spark, tmp_path):
+    """The listing reaches Spark as a local relation: its executed plan
+    scans no Python RDD (`Scan ExistingRDD`), so a scan of it starts no
+    Python worker."""
+    from chyme_spark.catalog import list_files
+
+    (tmp_path / "a").mkdir()
+    (tmp_path / "a" / "x.mov").write_bytes(b"x")
+    (tmp_path / "y.mp4").write_bytes(b"yy")
+    df = list_files(spark, str(tmp_path)).filter("size > 0")
+    assert df.count() == 2
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
 def test_jsonl_sink_commit_idempotent_and_abort_cleans(spark, tmp_path):
     """chyme_jsonl_sink exactly-once contract, unit level: (a) a
     replayed commit with the same batchId appends NOTHING (manifest
