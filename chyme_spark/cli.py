@@ -2,7 +2,8 @@
 
     chyme-spark ingest <root-or-url> --filter ext/mov [--recursion N] --catalog DIR
     chyme-spark tasker --catalog DIR --ledger DIR --tasks DIR
-    chyme-spark worker --tasks DIR --ledger DIR --quarantine DIR
+    chyme-spark worker --tasks DIR --ledger DIR --quarantine DIR [--follow | --redrive]
+    chyme-spark status [--catalog DIR] [--tasks DIR] [--ledger DIR] [--quarantine DIR]
     chyme-spark query <name> [--sf DIR] [--show N]
     chyme-spark sql "SELECT ..." [--sf DIR] [--table NAME=PATH] [--explain]
     chyme-spark ls-queries
@@ -11,6 +12,12 @@ The reference split these into three long-running services wired by
 Redis/SQS/HTTP (ref ``cmd/ingest.go``, ``cmd/tasker.go``,
 ``cmd/worker.go``); here each verb is one idempotent batch job over
 parquet tables, and the scheduler/queue is Spark itself.
+
+The work queue is tasks - ledger - quarantine: a failed task becomes a
+dead letter in the quarantine and no worker verb runs it again, until
+``worker --redrive`` retries the dead letters in one batch. ``status``
+prints each table's rows plus ``pending`` (the queue) and ``dead
+letters`` (quarantine - ledger).
 """
 
 from __future__ import annotations
@@ -21,32 +28,20 @@ import sys
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from chyme_spark import tables
 from chyme_spark.session import get_spark
 
 
-def _read_or_none(spark, path: str):
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — first run: table doesn't exist yet
-        return None
-
-
-def _read_ledger_or_none(spark, path: str):
-    """Ledger read with defensive task_hash dedup: append-mode writers
-    (including a crashed stream batch replayed before its checkpoint
-    committed) may leave duplicate rows; every consumer wants
-    one-row-per-task semantics (ADVICE r2)."""
-    df = _read_or_none(spark, path)
-    return None if df is None else df.dropDuplicates(["task_hash"])
-
-
-def _not_in_ledger(spark, tasks, ledger_path: str):
-    """``tasks`` less the ones the ledger records as completed; with no
-    ledger yet there is nothing to join against."""
-    ledger = _read_ledger_or_none(spark, ledger_path)
-    if ledger is None:
-        return tasks
-    return tasks.join(ledger.select("task_hash"), "task_hash", "left_anti")
+def pending(spark, tasks, ledger_path: str | None, quarantine_path: str | None):
+    """``tasks`` less the completed (in the ledger) and the dead letters
+    (in the quarantine): the work queue. A failed task leaves the queue
+    like the reference's Fail -> DLQ (ref internal/core/task.go:132-147);
+    pass ``quarantine_path=None`` to redrive it."""
+    for kind, path in (("ledger", ledger_path), ("quarantine", quarantine_path)):
+        seen = tables.read(spark, kind, path) if path else None
+        if seen is not None:
+            tasks = tasks.join(seen.select("task_hash"), "task_hash", "left_anti")
+    return tasks
 
 
 def _append_counted(df, path: str) -> int:
@@ -56,6 +51,24 @@ def _append_counted(df, path: str) -> int:
     written = Observation()
     df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(path)
     return written.get["n"]
+
+
+def _run_stream(writer, args) -> str:
+    """Run a ``--follow`` stream to its end and name its mode: drain what
+    is there (``availableNow``), or long-poll every ``--follow-interval``
+    until interrupted or ``--follow-duration`` elapses."""
+    interval = getattr(args, "follow_interval", None)
+    if interval:
+        writer = writer.trigger(processingTime=interval)
+    else:
+        writer = writer.trigger(availableNow=True)
+    q = writer.start()
+    duration = getattr(args, "follow_duration", None)
+    if duration is not None:
+        q.awaitTermination(duration)
+        q.stop()
+    q.awaitTermination()
+    return f"long-poll every {interval}" if interval else "stream drain"
 
 
 def _ingest_follow(spark, args) -> int:
@@ -91,7 +104,7 @@ def _ingest_follow(spark, args) -> int:
 
     def process(batch_df, _batch_id: int) -> None:
         catalog = _ingest(batch_df.select("url"), args.filter)
-        existing = _read_or_none(spark, args.catalog)
+        existing = tables.read(spark, "catalog", args.catalog)
         if existing is not None:
             catalog = catalog.join(existing.select("url"), "url", "left_anti")
         counts["n"] += _append_counted(catalog, args.catalog)
@@ -102,19 +115,7 @@ def _ingest_follow(spark, args) -> int:
         .writeStream.foreachBatch(process)
         .option("checkpointLocation", ckpt)
     )
-    interval = getattr(args, "follow_interval", None)
-    writer = (
-        writer.trigger(processingTime=interval)
-        if interval
-        else writer.trigger(availableNow=True)
-    )
-    q = writer.start()
-    duration = getattr(args, "follow_duration", None)
-    if duration is not None:
-        q.awaitTermination(duration)
-        q.stop()
-    q.awaitTermination()
-    mode = f"long-poll every {interval}" if interval else "stream drain"
+    mode = _run_stream(writer, args)
     print(f"cataloged {counts['n']} new resources ({mode})")
     return 0
 
@@ -167,7 +168,7 @@ def _ingest_once(
     ok = well_formed()
     rows = with_resource_columns(urls).filter(wanted | ~ok).dropDuplicates(["url"])
     # dedup against what's already cataloged (idempotent re-ingest)
-    existing = _read_or_none(spark, catalog_path)
+    existing = tables.read(spark, "catalog", catalog_path)
     if existing is not None:
         rows = rows.join(existing.select("url"), "url", "left_anti")
     malformed = Observation()
@@ -268,20 +269,21 @@ def cmd_tasker(args) -> int:
     from chyme_spark.templates import DEFAULT_TEMPLATES, with_overrides
 
     spark = get_spark("chyme_tasker")
-    catalog = spark.read.parquet(args.catalog)
-    # None before the first worker run: create_tasks then skips the join
-    ledger = _read_ledger_or_none(spark, args.ledger)
-    templates = with_overrides(
-        DEFAULT_TEMPLATES, mirror_base=args.mirror_base, executor=args.executor, cmd=args.cmd
-    )
-    tasks = create_tasks(catalog, ledger, templates)
-    # idempotent re-run: a task already created but not yet completed is in
-    # the tasks table, not the ledger — anti-join against BOTH, or re-running
-    # tasker before the worker drains would append duplicates (ADVICE r1).
-    pending = _read_or_none(spark, args.tasks)
-    if pending is not None:
-        tasks = tasks.join(pending.select("task_hash"), "task_hash", "left_anti")
-    n = _append_counted(tasks, args.tasks)
+    catalog = tables.read(spark, "catalog", args.catalog)
+    n = 0
+    if catalog is not None:
+        templates = with_overrides(
+            DEFAULT_TEMPLATES, mirror_base=args.mirror_base, executor=args.executor, cmd=args.cmd
+        )
+        # Anti-join the tasks table only: the ledger records only hashes
+        # of rows in the tasks table, so a task already completed, pending
+        # or quarantined is there, and re-running tasker before the worker
+        # drains appends no duplicate (ADVICE r1).
+        tasks = create_tasks(catalog, None, templates)
+        existing = tables.read(spark, "tasks", args.tasks)
+        if existing is not None:
+            tasks = tasks.join(existing.select("task_hash"), "task_hash", "left_anti")
+        n = _append_counted(tasks, args.tasks)
     print(f"created {n} tasks -> {args.tasks}")
     return 0
 
@@ -290,31 +292,37 @@ def _worker_batch(spark, args, todo) -> tuple[int, int]:
     """Run one batch of tasks and append ledger/quarantine rows."""
     from chyme_spark.runner import run_tasks
 
+    # Materialize the batch once: with nothing pending the verb starts no
+    # Python worker and writes nothing.
+    todo = todo.localCheckpoint(eager=True)
+    if todo.isEmpty():
+        return 0, 0
     if args.parallelism:
         todo = todo.repartition(args.parallelism)
     # Materialize the results once, with no lineage back to the ledger:
     # the ledger append below makes Spark refresh every cached plan that
-    # reads the ledger's path, `todo` (its anti-join) included. A cache()
-    # here was dropped by that refresh, and the quarantine write then ran
-    # every failing task's payload a second time.
+    # reads the ledger's path. A cache() here was dropped by that
+    # refresh, and the quarantine write then ran every failing task's
+    # payload a second time.
     results = run_tasks(todo, checkpoint_dir=args.checkpoint_dir).localCheckpoint(eager=True)
-    done = results.filter(F.col("ok")).select(
+    counts = Observation()
+    observed = results.observe(
+        counts, F.count_if("ok").alias("ok"), F.count_if(~F.col("ok")).alias("fail")
+    )
+    observed.filter(F.col("ok")).select(
         "task_hash", "stage", F.current_timestamp().alias("completed_at")
-    )
-    failed = results.filter(~F.col("ok")).select(
-        "task_hash", F.col("error"), F.current_timestamp().alias("failed_at"),
-        F.col("stage").alias("failed_stage"),
-    )
-    n_ok, n_fail = results.agg(F.count_if("ok"), F.count_if(~F.col("ok"))).first()
-    done.write.mode("append").parquet(args.ledger)
+    ).write.mode("append").parquet(args.ledger)
+    n_ok, n_fail = counts.get["ok"], counts.get["fail"]
     if n_fail:
-        # idempotent under stream-batch replay (ADVICE r2): a crash
-        # between this append and the stream-checkpoint commit re-runs
-        # the batch; the ledger anti-join already keeps completed tasks
-        # out, but failed tasks re-fail and would duplicate quarantine
-        # rows. Keep exactly one quarantine row per task_hash — the DLQ
-        # records THAT a task failed, not every attempt.
-        existing = _read_or_none(spark, args.quarantine)
+        # One quarantine row per task_hash — the DLQ records THAT a task
+        # failed, not every attempt: a redriven task that fails again, or
+        # a stream batch replayed after a crash between this append and
+        # its checkpoint commit (ADVICE r2), adds no second row.
+        failed = results.filter(~F.col("ok")).select(
+            "task_hash", F.col("error"), F.current_timestamp().alias("failed_at"),
+            F.col("stage").alias("failed_stage"),
+        )
+        existing = tables.read(spark, "quarantine", args.quarantine)
         if existing is not None:
             failed = failed.join(existing.select("task_hash"), "task_hash", "left_anti")
         failed.write.mode("append").parquet(args.quarantine)
@@ -330,7 +338,7 @@ def _worker_follow(spark, args) -> int:
     enqueued so far and exit (the reference's DequeueAll drain,
     pkg/aws/sqs.go:134-162); re-invoking resumes from the stream
     checkpoint, so each task FILE is read exactly once across
-    invocations, and the ledger anti-join inside the batch keeps
+    invocations, and the pending anti-join inside the batch keeps
     task-level idempotence even if the checkpoint is lost.
 
     ``--follow-interval "20 seconds"`` switches to a perpetual
@@ -351,50 +359,46 @@ def _worker_follow(spark, args) -> int:
         if getattr(args, "follow_duration", None)
         else None
     )
-    while _read_or_none(spark, args.tasks) is None:
+    while not tables.exists(spark, args.tasks):
         if deadline is not None and _time.monotonic() >= deadline:
             print("no tasks table appeared before --follow-duration; exiting")
             return 0
         print(f"waiting for tasks table {args.tasks} ...")
         _time.sleep(2.0)
-    schema = spark.read.parquet(args.tasks).schema
     counts = {"ok": 0, "fail": 0}
 
     def process(batch_df, _batch_id: int) -> None:
-        n_ok, n_fail = _worker_batch(spark, args, _not_in_ledger(spark, batch_df, args.ledger))
+        todo = pending(spark, batch_df, args.ledger, args.quarantine)
+        n_ok, n_fail = _worker_batch(spark, args, todo)
         counts["ok"] += n_ok
         counts["fail"] += n_fail
 
     ckpt = args.follow_checkpoint or f"{args.tasks.rstrip('/')}_stream_ckpt"
     writer = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(tables.SCHEMAS["tasks"])
         .parquet(args.tasks)
         .writeStream.foreachBatch(process)
         .option("checkpointLocation", ckpt)
     )
-    interval = getattr(args, "follow_interval", None)
-    writer = (
-        writer.trigger(processingTime=interval)
-        if interval
-        else writer.trigger(availableNow=True)
-    )
-    q = writer.start()
-    duration = getattr(args, "follow_duration", None)
-    if duration is not None:
-        q.awaitTermination(duration)
-        q.stop()
-    q.awaitTermination()
-    mode = f"long-poll every {interval}" if interval else "stream drain"
+    mode = _run_stream(writer, args)
     print(f"completed {counts['ok']} tasks; quarantined {counts['fail']} ({mode})")
     return 0
 
 
 def cmd_worker(args) -> int:
+    redrive = getattr(args, "redrive", False)
+    if redrive and getattr(args, "follow", False):
+        print("error: --redrive is a batch verb; it cannot combine with --follow",
+              file=sys.stderr)
+        return 2
     spark = get_spark("chyme_worker")
     if getattr(args, "follow", False):
         return _worker_follow(spark, args)
-    todo = _not_in_ledger(spark, spark.read.parquet(args.tasks), args.ledger)
-    n_ok, n_fail = _worker_batch(spark, args, todo)
+    tasks = tables.read(spark, "tasks", args.tasks)
+    n_ok = n_fail = 0
+    if tasks is not None:
+        todo = pending(spark, tasks, args.ledger, None if redrive else args.quarantine)
+        n_ok, n_fail = _worker_batch(spark, args, todo)
     print(f"completed {n_ok} tasks; quarantined {n_fail}")
     return 0
 
@@ -414,28 +418,20 @@ def cmd_pipeline(args) -> int:
 def cmd_status(args) -> int:
     """Pipeline table depths — parity with the reference's SCard /
     ApproximateNumberOfMessages polling (ref internal/core/resource.go:105-108,
-    pkg/aws/sqs.go:110-131), as one batch read."""
+    pkg/aws/sqs.go:110-131): each table's rows, then the work queue
+    (tasks - ledger - quarantine) and the live DLQ (quarantine - ledger)."""
     spark = get_spark("chyme_status")
-    for label, path in [
-        ("catalog", args.catalog),
-        ("tasks", args.tasks),
-        ("ledger", args.ledger),
-        ("quarantine", args.quarantine),
-    ]:
-        if not path:
-            continue
-        df = _read_or_none(spark, path)
-        if df is None:
-            print(f"{label:10s} -")
-            continue
-        n = df.count()
-        extra = ""
-        if label == "tasks" and "task_hash" in df.columns:
-            ledger = _read_ledger_or_none(spark, args.ledger) if args.ledger else None
-            if ledger is not None:
-                pending = df.join(ledger.select("task_hash"), "task_hash", "left_anti").count()
-                extra = f"  (pending: {pending})"
-        print(f"{label:10s} {n}{extra}")
+    paths = {k: getattr(args, k) for k in ("catalog", "tasks", "ledger", "quarantine")}
+    dfs = {k: tables.read(spark, k, p) if p else None for k, p in paths.items()}
+    for kind, path in paths.items():
+        if path:
+            print(f"{kind:10s} {'-' if dfs[kind] is None else dfs[kind].count()}")
+    if dfs["tasks"] is not None:
+        queue = pending(spark, dfs["tasks"], args.ledger, args.quarantine)
+        print(f"{'pending':10s} {queue.count()}")
+    if dfs["quarantine"] is not None:
+        dead = pending(spark, dfs["quarantine"], args.ledger, None)
+        print(f"{'dead letters':10s} {dead.count()}")
     return 0
 
 
@@ -674,6 +670,9 @@ def main(argv: list[str] | None = None) -> int:
                         "seconds (bounded runs / tests); default: until interrupted")
     p.add_argument("--checkpoint-dir", default=None,
                    help="durable workspace root enabling stage-level resume")
+    p.add_argument("--redrive", action="store_true",
+                   help="retry the dead letters too: quarantined tasks count as "
+                        "pending for this batch verb (not with --follow)")
     p.set_defaults(fn=cmd_worker)
 
     p = sub.add_parser("pipeline", help="ingest + tasker + worker in one run")

@@ -32,21 +32,20 @@ def test_pipeline_verb_end_to_end(spark, tmp_path):
     assert ledger.count() == 2  # still exactly one ledger row per task
 
 
-def test_pipeline_runs_each_failing_task_once(spark, tmp_path):
-    """A worker verb runs each pending task's payload once. The second
-    verb retries the poison task with the quarantine table already in
-    place; its ledger append must not make the quarantine write run the
-    failing payload again."""
+def _logged_pipeline(tmp_path, files: dict[str, bytes]):
+    """A source tree of ``files`` and ``pipeline`` args whose payload logs
+    each input's name to ``runs.log`` and rejects POISON inputs; returns
+    (args, tables dir, payload_runs)."""
     src = tmp_path / "media"
     src.mkdir()
-    (src / "good.mov").write_bytes(b"CHYME" + b"g" * 40)
-    (src / "bad.mov").write_bytes(b"POISON" + b"p" * 40)
+    for name, body in files.items():
+        (src / name).write_bytes(body)
     runs = tmp_path / "runs.log"
     t = tmp_path / "tables"
     args = [
         "pipeline", str(src), "--filter", "ext/mov",
         "--catalog", f"{t}/catalog", "--ledger", f"{t}/ledger",
-        "--tasks", f"{t}/tasks", "--quarantine", f"{t}/quar",
+        "--tasks", f"{t}/tasks", "--quarantine", f"{t}/quarantine",
         "--mirror-base", f"file://{t}/mirror", "--executor", "subprocess",
         "--cmd", (
             f'for f in "$IN"/*; do basename "$f" >> {runs}; '
@@ -58,14 +57,125 @@ def test_pipeline_runs_each_failing_task_once(spark, tmp_path):
     def payload_runs() -> list[str]:
         return sorted(runs.read_text().split()) if runs.exists() else []
 
+    return args, t, payload_runs
+
+
+def _worker(t) -> list[str]:
+    return ["worker", "--tasks", f"{t}/tasks", "--ledger", f"{t}/ledger",
+            "--quarantine", f"{t}/quarantine"]  # fmt: skip
+
+
+GOOD_AND_POISON = {"good.mov": b"CHYME" + b"g" * 40, "bad.mov": b"POISON" + b"p" * 40}
+
+
+def test_pipeline_runs_each_failing_task_once(spark, tmp_path, capsys):
+    """A failed task is a dead letter: it leaves the work queue, and a
+    later verb does not run it again. ``worker --redrive`` retries it
+    once, with the quarantine table already in place — its ledger append
+    must not make the quarantine write run the failing payload again —
+    and a failure that repeats adds no second quarantine row."""
+    args, t, payload_runs = _logged_pipeline(tmp_path, GOOD_AND_POISON)
+    worker = _worker(t)
+    status = ["status"] + _worker(t)[1:]
     assert cli.main(args) == 0
     assert payload_runs() == ["bad.mov", "good.mov"]
-    assert spark.read.parquet(f"{t}/quar").count() == 1
-    runs.unlink()
+    assert spark.read.parquet(f"{t}/quarantine").count() == 1
+    (tmp_path / "runs.log").unlink()
     assert cli.main(args) == 0
+    assert payload_runs() == []  # dead letters are not retried
+    capsys.readouterr()
+    assert cli.main(status) == 0
+    out = capsys.readouterr().out
+    assert "pending    0" in out and "dead letters 1" in out
+    assert cli.main(worker + ["--redrive"]) == 0
     assert payload_runs() == ["bad.mov"]  # a dropped cache() ran it twice
-    assert spark.read.parquet(f"{t}/quar").count() == 1
+    assert "completed 0 tasks; quarantined 1" in capsys.readouterr().out
+    assert spark.read.parquet(f"{t}/quarantine").count() == 1
     assert spark.read.parquet(f"{t}/ledger").count() == 1
+    assert cli.main(worker + ["--redrive", "--follow"]) == 2
+
+
+def test_worker_without_tasks_table(spark, tmp_path, capsys):
+    assert cli.main(_worker(tmp_path / "tables")) == 0
+    assert "completed 0 tasks; quarantined 0" in capsys.readouterr().out
+
+
+def test_corrupt_ledger_fails_the_worker(spark, tmp_path):
+    """An unreadable ledger is an error, never "no ledger yet": reading
+    it as empty would run every completed task's payload again."""
+    args, t, payload_runs = _logged_pipeline(tmp_path, {"good.mov": b"CHYME" + b"g" * 40})
+    assert cli.main(args) == 0
+    assert payload_runs() == ["good.mov"]
+    (tmp_path / "runs.log").unlink()
+    ledger = t / "ledger"
+    parts = [p for p in ledger.iterdir() if p.suffix == ".parquet"]
+    assert parts
+    for p in parts:
+        p.write_bytes(b"not a parquet file")
+        (ledger / f".{p.name}.crc").unlink(missing_ok=True)
+    try:
+        rc = cli.main(_worker(t))
+    except Exception:  # noqa: BLE001 — failing by exception is failing
+        rc = None
+    assert rc != 0
+    assert payload_runs() == []
+
+
+def _hashes(spark, path) -> set[str]:
+    return {r.task_hash for r in spark.read.parquet(str(path)).select("task_hash").collect()}
+
+
+def test_pipeline_tables_match_their_schemas(spark, tmp_path):
+    """Every table a pipeline verb writes has exactly the schema
+    ``tables.read`` reads it with, by field names and types."""
+    from chyme_spark import tables
+
+    args, t, _runs = _logged_pipeline(tmp_path, GOOD_AND_POISON)
+    assert cli.main(args) == 0
+    for kind, schema in tables.SCHEMAS.items():
+        written = spark.read.parquet(str(t / kind)).schema
+        assert [(f.name, f.dataType) for f in written] == [
+            (f.name, f.dataType) for f in schema
+        ], kind
+
+
+def test_tasks_table_contains_the_ledger(spark, tmp_path):
+    """The tasker anti-joins the tasks table alone, which is enough only
+    while every ledger hash is also in the tasks table: after a pipeline
+    verb, a streaming worker drain and a compaction of the tasks table."""
+    args, t, payload_runs = _logged_pipeline(tmp_path, GOOD_AND_POISON)
+    assert cli.main(args) == 0
+    assert _hashes(spark, t / "ledger") <= _hashes(spark, t / "tasks")
+
+    (tmp_path / "media" / "more.mov").write_bytes(b"CHYME" + b"m" * 40)
+    common = ["--catalog", f"{t}/catalog", "--ledger", f"{t}/ledger", "--tasks", f"{t}/tasks"]
+    assert cli.main(["ingest", str(tmp_path / "media"), "--filter", "ext/mov",
+                     "--catalog", f"{t}/catalog"]) == 0  # fmt: skip
+    assert cli.main(["tasker"] + common + args[args.index("--mirror-base"):]) == 0
+    assert cli.main(_worker(t) + ["--follow"]) == 0
+    assert len(_hashes(spark, t / "ledger")) == 2
+    assert _hashes(spark, t / "ledger") <= _hashes(spark, t / "tasks")
+
+    assert cli.main(["compact", "--table", f"{t}/tasks"]) == 0
+    (tmp_path / "runs.log").unlink()
+    assert cli.main(args) == 0  # idle: no task re-created, none re-run
+    assert payload_runs() == []
+    assert spark.read.parquet(f"{t}/tasks").count() == 3
+    assert _hashes(spark, t / "ledger") <= _hashes(spark, t / "tasks")
+
+
+def test_idle_pipeline_verb_job_budget(spark, tmp_path):
+    """A ``pipeline`` verb with nothing new to do runs at most 10 Spark
+    jobs (22 when every table read inferred its schema and every verb
+    re-ran the dead letters) and starts no payload."""
+    args, _t, payload_runs = _logged_pipeline(tmp_path, GOOD_AND_POISON)
+    assert cli.main(args) == 0
+    (tmp_path / "runs.log").unlink()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    assert cli.main(args) == 0
+    assert dag.nextJobId() - first <= 10
+    assert payload_runs() == []
 
 
 def test_ingest_once_counts_malformed(spark, tmp_path):
@@ -452,3 +562,21 @@ def test_persist_hygiene(tmp_path):
     )
     flagged = chk.check_file(str(two))
     assert len(flagged) == 1 and "persist() of y in q()" in flagged[0], flagged
+
+
+def test_pipeline_tables_read_through_tables_module():
+    """cli.py reads the four pipeline tables only through
+    ``tables.read`` (a known schema, no inference job, and an unreadable
+    table raises): no bare ``spark.read.parquet(args.<table>)`` and no
+    catch-all ``_read_or_none`` that takes a broken table for a missing
+    one."""
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    src = open(os.path.join(root, "chyme_spark", "cli.py")).read()
+    bare = re.findall(
+        r"spark\.read\.parquet\(\s*(?:args\.)?(?:catalog|tasks|ledger|quarantine)\w*\s*\)", src
+    )
+    assert not bare, bare
+    assert not re.search(r"def _read_or_none\b", src)
