@@ -1,11 +1,15 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+Prints the full JSON, a ``BENCH_SUMMARY`` line and, last, a compact
+JSON line (``final_line``):
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
+Every timing goes through one fault-isolated probe runner (``Runner``,
+``probe_block``), which tools/bench_census.py, tools/probe_hotkey.py and
+tools/probe_queries.py import.
+
 ``value`` is the total wall-clock over the headline set.  Each query is
-executed to completion via the `noop` sink
-(``df.write.format("noop").mode("overwrite").save()``), which evaluates
+executed to completion via the `noop` sink (``Runner.time``), which evaluates
 EVERY output column on every row but discards the bytes — unlike
 ``count()``, which lets Catalyst prune all projections (a
 projection-only query timed with count() measures a scan, not the
@@ -298,395 +302,326 @@ def _cpu_calibration() -> float:
     return round(sorted(one() for _ in range(3))[1], 4)
 
 
+# --- the probe runner ------------------------------------------------------
+# One runner for every timing site: bench.py's blocks and the tools
+# (bench_census, probe_hotkey, probe_queries) that import it.
+
+
+def median(xs: list[float]) -> float:
+    s = sorted(xs)
+    mid = len(s) // 2
+    return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
+
+
+def _error(e: Exception) -> str:
+    return f"{type(e).__name__}: {e}"[:300]
+
+
+def probe_block(members: list[str], time_one, revive_if_dead, passes: int = 3) -> dict:
+    """Warm + ``passes`` timed passes per member, fault-isolated.
+
+    ``time_one(name)`` returns one member's seconds; ``revive_if_dead()``
+    rebuilds a stopped context and says whether it had to. A member that
+    throws (or kills the context) is dropped and its error recorded;
+    the survivors' medians are still reported, as
+    ``{"queries_median": ..., "errors": ..., "revived": True}`` (the
+    last two only when they happened).
+
+    A mid-block context death loses the SURVIVORS' warm state too (JIT,
+    parquet footers live in the replaced JVM), so timed passes taken on
+    the fresh session would run cold and silently inflate innocent
+    medians — possibly tripping the scale-cliff flag. After any revival
+    the still-ok members get an untimed re-warm run, timings already
+    taken in the interrupted pass are kept (they were warm when taken),
+    and the block is flagged ``revived``: its numbers ran partly on a
+    fresh JVM."""
+    errors: dict[str, str] = {}
+    revived = False
+
+    def fail(name: str, e: Exception) -> bool:
+        nonlocal revived
+        errors[name] = _error(e)
+        dead = revive_if_dead()
+        revived |= dead
+        return dead
+
+    def rewarm(ok: list[str]) -> None:
+        # A context death DURING the rewarm would strand the members
+        # re-run before it cold again: restart until one full pass
+        # completes with no revival. Bounded — every restart removed at
+        # least one failing member.
+        while True:
+            died = False
+            for m in list(ok):
+                try:
+                    time_one(m)
+                except Exception as e:  # noqa: BLE001
+                    ok.remove(m)
+                    died |= fail(m, e)
+            if not died:
+                return
+
+    ok: list[str] = []
+    died = False
+    for name in members:  # warm pass (footers, codegen)
+        try:
+            time_one(name)
+            ok.append(name)
+        except Exception as e:  # noqa: BLE001
+            died |= fail(name, e)
+    if died:
+        rewarm(ok)  # members warmed before the death lost that warmth
+    times: dict[str, list[float]] = {n: [] for n in ok}
+    for _ in range(passes):
+        for name in list(ok):
+            if name not in times:
+                continue  # dropped by a rewarm failure mid-pass
+            try:
+                times[name].append(time_one(name))
+            except Exception as e:  # noqa: BLE001
+                ok.remove(name)
+                times.pop(name)
+                if fail(name, e):
+                    rewarm(ok)
+                    times = {n: ts for n, ts in times.items() if n in ok}
+    block: dict = {"queries_median": {n: round(median(ts), 3) for n, ts in times.items() if ts}}
+    if errors:
+        block["errors"] = errors
+    if revived:
+        block["revived"] = True
+    return block
+
+
+class Runner:
+    """Times registered queries on one Spark session, built by
+    ``factory``; a member that kills the context (in local mode an
+    executor-thread OOM stops the whole SparkContext) costs that member
+    only, because :meth:`revive_if_dead` rebuilds the session from the
+    same factory — a revival inside a low-core block stays low-core."""
+
+    def __init__(self, registry: dict, factory):
+        self.registry = registry
+        self.factory = factory
+        self.spark = factory()
+
+    def time(self, name: str, data_dir: str) -> float:
+        """Seconds to build ``name`` over ``data_dir`` and run it into
+        the ``noop`` sink: full evaluation of every output column, zero
+        materialization — immune to count()'s column pruning. Query
+        construction is inside the timing, so queries with eager staging
+        (localCheckpoint) are charged for it."""
+        t0 = time.time()
+        df = self.registry[name].fn(self.spark, data_dir)
+        df.write.format("noop").mode("overwrite").save()
+        return time.time() - t0
+
+    def restart(self, factory=None) -> None:
+        """Stop the session and build a new one (from ``factory`` when
+        given, which then becomes the runner's factory)."""
+        # A JVM-side stop (executor OOM) leaves the PYTHON-side
+        # singletons pointing at the dead session, and getOrCreate then
+        # returns/patches THAT instead of building a new one
+        # ("LiveListenerBus is stopped"). spark.stop() clears them even
+        # when the JVM context is already gone.
+        try:
+            self.spark.stop()
+        except Exception:  # noqa: BLE001 — best-effort teardown of a corpse
+            pass
+        if factory is not None:
+            self.factory = factory
+        self.spark = self.factory()
+
+    def revive_if_dead(self) -> bool:
+        try:
+            dead = self.spark.sparkContext._jsc.sc().isStopped()
+        except Exception:  # noqa: BLE001 — a dead gateway counts as dead
+            dead = True
+        if dead:
+            self.restart()
+        return dead
+
+    def block(self, members: list[str], data_dir: str, passes: int = 3) -> dict:
+        """:func:`probe_block` over ``members`` at ``data_dir``."""
+        return probe_block(
+            members, lambda n: self.time(n, data_dir), self.revive_if_dead, passes
+        )
+
+
+_CLIFF = 3.0  # flag a scale probe member when time ratio > _CLIFF * data ratio
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from chyme_spark.registry import load_all
     from chyme_spark.session import get_spark
 
     registry = load_all()
-    # the session a block runs on: revive_if_dead() rebuilds THIS one,
-    # so a revival inside the low-core probe stays low-core
-    make_session = functools.partial(get_spark, "chyme_bench")
-    spark = make_session()
+    bench_session = functools.partial(get_spark, "chyme_bench")
+    runner = Runner(registry, bench_session)
     names = [n for n in HEADLINE if n in registry]
-
-    def run(name: str) -> None:
-        df = registry[name].fn(spark, sf_dir)
-        # noop sink: full evaluation of every output column, zero
-        # materialization — immune to count()'s column pruning
-        df.write.format("noop").mode("overwrite").save()
 
     # warm the JVM + parquet footers once so per-query numbers measure the
     # query, not session bring-up
-    run("d14_hash_agg_q1")
-
-    timings: dict[str, float] = {}
-    for name in names:
-        t0 = time.time()
-        run(name)
-        timings[name] = round(time.time() - t0, 3)
+    runner.time("d14_hash_agg_q1", sf_dir)
+    timings = {name: round(runner.time(name, sf_dir), 3) for name in names}
 
     # steady-state passes: execution with plan/codegen already JIT'd —
     # the per-query number a long-running cluster actually pays. The
     # headline `value` stays the cold pass for round-over-round
     # comparability. n>=5 passes with per-query MEDIAN (+ spread) so a
     # host-load wobble on any single pass can't masquerade as a
-    # regression (r3 item 4): `queries_steady` is the median,
-    # `queries_steady_spread` the max-min across passes.
+    # regression: `queries_steady` is the median, `queries_steady_spread`
+    # the max-min across passes.
     n_steady = int(os.environ.get("SPARK_GRAFT_STEADY_PASSES", "5"))
-    passes: list[dict[str, float]] = []
-    for _ in range(n_steady):
-        p: dict[str, float] = {}
-        for name in names:
-            t0 = time.time()
-            run(name)
-            p[name] = time.time() - t0
-        passes.append(p)
-
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-
+    passes = [{n: runner.time(n, sf_dir) for n in names} for _ in range(n_steady)]
     steady = {n: round(median([p[n] for p in passes]), 3) for n in names}
     spread = {
         n: round(max(p[n] for p in passes) - min(p[n] for p in passes), 3) for n in names
     }
+    # scaling-contract fields: the effective master and shuffle-partition
+    # count the headline battery ran under, so the driver can verify
+    # $SPARK_GRAFT_CPUS is honored mechanically
+    main_master = runner.spark.sparkContext.master
+    main_shuffle_parts = int(runner.spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # --- shared probe machinery -----------------------------------------
-    # An OOM inside one probe member must cost exactly that member: in
-    # local mode an executor-thread OOM stops the whole SparkContext, so
-    # every later block (r9: the entire rotation battery) died with it.
-    # revive_if_dead() rebuilds the session after a fatal member and the
-    # per-member try/except keeps the block's other numbers.
-    revivals = 0
-
-    def revive_if_dead() -> bool:
-        nonlocal spark, revivals
-        try:
-            dead = spark.sparkContext._jsc.sc().isStopped()
-        except Exception:  # noqa: BLE001 — a dead gateway counts as dead
-            dead = True
-        if dead:
-            # A JVM-side stop (executor OOM) leaves the PYTHON-side
-            # singletons (SparkSession._instantiatedSession /
-            # SparkContext._active_spark_context) pointing at the dead
-            # session, and getOrCreate then returns/patches THAT instead
-            # of building a new one ("LiveListenerBus is stopped").
-            # spark.stop() clears the Python singletons even when the
-            # JVM context is already gone; only then can get_spark
-            # actually rebuild (r9 review finding, verified empirically).
-            try:
-                spark.stop()
-            except Exception:  # noqa: BLE001 — best-effort teardown of a corpse
-                pass
-            spark = make_session()
-            revivals += 1
-        return dead
-
-    def flag_revived(block: dict | None, since: int) -> None:
-        # numbers taken across a revival ran partly on a fresh JVM
-        if block is not None and revivals > since:
-            block["revived"] = True
-
-    def run_at(name: str, d: str) -> float:
-        t0 = time.time()
-        df = registry[name].fn(spark, d)
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    def probe_block(block_names: list[str], d: str, n_passes: int = 3):
-        """Warm + n timed passes per member, fault-isolated: a member
-        that throws (or kills the context) is recorded in errors and
-        dropped; the survivors' medians are still reported.
-
-        A mid-block context death loses the SURVIVORS' warm state too
-        (JIT, parquet footers live in the replaced JVM), so timed passes
-        taken on the fresh session would run cold and silently inflate
-        innocent medians — possibly tripping the 3x scale-cliff flag
-        (r10 review finding). After any revive, the still-ok members get
-        an untimed re-warm run, and timings already taken in the
-        interrupted pass are kept (they were warm when taken)."""
-        errors: dict[str, str] = {}
-        ok: list[str] = []
-
-        def rewarm(members: list[str]) -> None:
-            # A context death DURING the rewarm would strand the members
-            # re-run before it cold again (r10 review finding): restart
-            # until one full pass completes with no revival. Bounded —
-            # every restart removed at least one failing member.
-            while True:
-                revived = False
-                for m in list(members):
-                    try:
-                        run_at(m, d)
-                    except Exception as e:  # noqa: BLE001
-                        errors[m] = f"{type(e).__name__}: {e}"[:300]
-                        members.remove(m)
-                        revived |= revive_if_dead()
-                if not revived:
-                    return
-
-        revived_in_warm = False
-        for name in block_names:  # warm pass (footers, codegen)
-            try:
-                run_at(name, d)
-                ok.append(name)
-            except Exception as e:  # noqa: BLE001
-                errors[name] = f"{type(e).__name__}: {e}"[:300]
-                revived_in_warm |= revive_if_dead()
-        if revived_in_warm:
-            rewarm(ok)  # members warmed before the death lost that warmth
-        times: dict[str, list[float]] = {n: [] for n in ok}
-        for _ in range(n_passes):
-            for name in list(ok):
-                if name not in times:
-                    continue  # dropped by a rewarm failure mid-pass
-                try:
-                    times[name].append(run_at(name, d))
-                except Exception as e:  # noqa: BLE001
-                    errors[name] = f"{type(e).__name__}: {e}"[:300]
-                    ok.remove(name)
-                    times.pop(name, None)
-                    if revive_if_dead():
-                        rewarm(ok)
-                        times = {n: ts for n, ts in times.items() if n in ok}
-        meds = {n: round(median(ts), 3) for n, ts in times.items() if ts}
-        return meds, errors
-
-    # --- bench-battery rotation (VERDICT r8 #5) -------------------------
-    # HEADLINE is fixed for round-over-round comparability (it contains
-    # the 13-query round-1 baseline core), but the registry holds ~5x
-    # more queries than the battery — a slow regression in the other ~196
-    # was invisible. Mirror the correctness-window policy: ~10 rotation
-    # slots per round through the never/stalest-benched registry members,
-    # stamped in tools/bench_ledger.json (name -> last-benched round).
-    # Runs BEFORE the scale probes so a probe OOM cannot sink it (r9).
-    # Membership: module-scope ROTATION (guarded by test_bench_battery).
-    rot_block = None
-    since = revivals
-    if os.environ.get("SPARK_GRAFT_ROTATION", "1") != "0":
-        rot_med, rot_errors = probe_block(
-            [n for n in ROTATION if n in registry], sf_dir
-        )
-        rot_block = {
-            "members": [n for n in ROTATION if n in registry],
-            "ledger": "tools/bench_ledger.json",
-            "queries_median": rot_med,
-        }
-        if rot_errors:
-            rot_block["errors"] = rot_errors
-    flag_revived(rot_block, since)
-
-    # --- sf0.1 base medians for probe-only members (r10) ----------------
-    # The sf1/sf2 ratios need a SAME-ROUND sf0.1 denominator. Headline
-    # members have one in `steady`; rotation members in `rot_med`; any
-    # probe member in neither (e.g. x_record_linkage / x_semdedup /
-    # x_cross_source_leakage in a round where the rotation has moved on)
-    # gets a dedicated warm+3-pass block here so its scale ratio is
-    # apples-to-apples, never a cross-round comparison.
-    probe_base = dict(steady)
-    if rot_block:
-        probe_base.update(rot_block["queries_median"])
-    base_block = None
-    base_needed = [
-        n for n in dict.fromkeys(SF1_HEAVY + SF2_SKEW)
-        if n in registry and n not in probe_base
-    ]
-    # Gate on (any probe enabled) AND sf==0.1 — gating on SF1 alone
-    # silently disabled the sf2 cliff flag for SF2-only members when
-    # SF1=0, and on a non-sf0.1 run the heavy base block ran for a
-    # denominator nothing consumes (r10 review finding).
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    probes_on = sf == "0.1" and (
-        os.environ.get("SPARK_GRAFT_SF1", "1") != "0"
-        or os.environ.get("SPARK_GRAFT_SF2", "1") != "0"
-    )
-    since = revivals
-    if base_needed and probes_on:
-        base_med, base_errors = probe_block(base_needed, sf_dir)
-        probe_base.update(base_med)
-        base_block = {"members": base_needed, "queries_median": base_med}
-        if base_errors:
-            base_block["errors"] = base_errors
-    flag_revived(base_block, since)
+    # the sf1/sf2 ratios' SAME-ROUND sf0.1 denominators: headline
+    # steady medians, then rotation and probe_base medians
+    base = dict(steady)
 
-    # --- scale-cliff probe (VERDICT r5 item 6) --------------------------
-    # The 2x gate at sf0.1 cannot see a cost curve that bends far above
-    # the data ratio. Run the heaviest ops once more at a deterministic
-    # 10x scale-up of sf0.1 (chyme_spark.scaleup — replicated key
-    # spaces, no RNG) and flag any query whose sf1/sf0.1 median ratio
-    # exceeds _CLIFF x the 10x data ratio. Disable: SPARK_GRAFT_SF1=0.
-    # membership: module-scope SF1_HEAVY (guarded by test_bench_battery)
-    _CLIFF = 3.0  # flag when time ratio > _CLIFF * data ratio
-    sf1_block = None
-    since = revivals
-    if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and sf == "0.1":
+    def rotation() -> dict | None:
+        # HEADLINE is fixed for round-over-round comparability, but the
+        # registry holds ~5x more queries than the battery — a slow
+        # regression in the rest would be invisible. ~10 rotation slots
+        # per round walk the never/stalest-benched members, stamped in
+        # tools/bench_ledger.json. Runs BEFORE the scale probes so a
+        # probe OOM cannot sink it.
+        if os.environ.get("SPARK_GRAFT_ROTATION", "1") == "0":
+            return None
+        members = [n for n in ROTATION if n in registry]
+        blk = {"members": members, "ledger": "tools/bench_ledger.json"}
+        blk.update(runner.block(members, sf_dir))
+        base.update(blk["queries_median"])
+        return blk
+
+    def probe_base() -> dict | None:
+        # probe members with no sf0.1 median in this run yet get a
+        # dedicated block, so every scale ratio is apples-to-apples,
+        # never a cross-round comparison. Only when a probe will consume
+        # it: any scale probe enabled AND sf == 0.1.
+        needed = [
+            n for n in dict.fromkeys(SF1_HEAVY + SF2_SKEW)
+            if n in registry and n not in base
+        ]
+        probes_on = sf == "0.1" and (
+            os.environ.get("SPARK_GRAFT_SF1", "1") != "0"
+            or os.environ.get("SPARK_GRAFT_SF2", "1") != "0"
+        )
+        if not (needed and probes_on):
+            return None
+        blk = {"members": needed}
+        blk.update(runner.block(needed, sf_dir))
+        base.update(blk["queries_median"])
+        return blk
+
+    def scale(
+        members: list[str], factor: int, switch: str, dir_var: str, default_dir: str
+    ) -> dict | None:
+        # The 2x gate at sf0.1 cannot see a cost curve that bends far
+        # above the data ratio: re-run the heaviest ops at a
+        # deterministic ``factor``x scale-up of sf0.1 (chyme_spark.scaleup
+        # — replicated key spaces, no RNG; the scaled dirs are
+        # content-keyed caches, so repeat runs skip generation) and flag
+        # any query whose ratio to its sf0.1 median exceeds _CLIFF x the
+        # data ratio. 10x (SF1_HEAVY) probes the heaviest shuffle/explode
+        # ops; 20x (SF2_SKEW) doubles every key group again for the
+        # skew-sensitive candidate generators.
+        if os.environ.get(switch, "1") == "0" or sf != "0.1":
+            return None
+        from chyme_spark.scaleup import ensure_scaled
+
+        d = os.environ.get(dir_var, default_dir)
+        t0 = time.time()
+        ensure_scaled(runner.spark, sf_dir, d, factor=factor)
+        blk = {"dir": d, "factor": factor, "gen_sec": round(time.time() - t0, 3)}
+        blk.update(runner.block([n for n in members if n in registry], d))
+        ratio = {
+            n: round(v / base[n], 1) if base.get(n) else None
+            for n, v in blk["queries_median"].items()
+        }
+        blk["ratio_vs_sf0.1"] = ratio
+        blk["flagged_scale_cliff"] = sorted(
+            n for n, r in ratio.items() if r is not None and r > _CLIFF * factor
+        )
+        return blk
+
+    def core_scaling() -> dict | None:
+        # The driver's own 8-core re-run at sf0.1 cannot tell serial from
+        # parallel: headline queries are 0.1-2 s there, fixed overhead
+        # dominates and ratios sit at ~1. Re-run the CORE_SCALE members
+        # at sf1 on a quarter-core session and record high/low speedups:
+        # a genuinely parallel op shows a ratio well above 1 once the
+        # work dwarfs fixed overhead.
+        sf1 = blocks.get("sf1", {})
+        if os.environ.get("SPARK_GRAFT_CORE_PROBE", "1") == "0" or "queries_median" not in sf1:
+            return None
+        high = runner.spark.sparkContext.defaultParallelism
+        low = max(2, high // 4)
+        runner.restart(functools.partial(
+            get_spark,
+            "chyme_bench_lowcore",
+            master=f"local[{low}]",
+            extra_conf={"spark.sql.shuffle.partitions": str(low)},
+        ))
         try:
-            from chyme_spark.scaleup import ensure_scaled
-
-            sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/chyme_sf1")
-            t0 = time.time()
-            ensure_scaled(spark, sf_dir, sf1_dir, factor=10)
-            gen_sec = round(time.time() - t0, 3)
-
-            sf1_med, sf1_errors = probe_block(
-                [n for n in SF1_HEAVY if n in registry], sf1_dir
-            )
-            ratio = {
-                n: round(v / probe_base[n], 1) if probe_base.get(n) else None
-                for n, v in sf1_med.items()
-            }
-            sf1_block = {
-                "dir": sf1_dir,
-                "factor": 10,
-                "gen_sec": gen_sec,
-                "queries_median": sf1_med,
-                "ratio_vs_sf0.1": ratio,
-                "flagged_scale_cliff": sorted(
-                    n for n, r in ratio.items() if r is not None and r > _CLIFF * 10
-                ),
-            }
-            if sf1_errors:
-                sf1_block["errors"] = sf1_errors
-        except Exception as e:  # noqa: BLE001 — the probe must never sink the bench line
-            sf1_block = {"error": f"{type(e).__name__}: {e}"}
-            revive_if_dead()
-    flag_revived(sf1_block, since)
-
-    # --- core-scaling pair at sf1 (VERDICT r15 #2) ----------------------
-    # The driver's own 8-core re-run at sf0.1 cannot distinguish serial
-    # from parallel: every headline query is 0.1-2 s there, where per-job
-    # fixed overhead dominates and ratios sit at ~1 regardless
-    # (PERF_r15 "suspect_cpus_ignored"). Re-run the five heaviest
-    # SF1_HEAVY members at sf1 (10x data, multi-second queries) on a
-    # quarter-core session and record low/high ratios: a genuinely
-    # parallel op should show a ratio well above 1 once the work
-    # dwarfs fixed overhead. Disable: SPARK_GRAFT_CORE_PROBE=0.
-    core_block = None
-    main_master = spark.sparkContext.master
-    main_shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    since = revivals
-    if (
-        os.environ.get("SPARK_GRAFT_CORE_PROBE", "1") != "0"
-        and sf1_block is not None
-        and "queries_median" in sf1_block
-    ):
-        try:
-            high = spark.sparkContext.defaultParallelism
-            low = max(2, high // 4)
-            spark.stop()
-            make_session = functools.partial(
-                get_spark,
-                "chyme_bench_lowcore",
-                master=f"local[{low}]",
-                extra_conf={"spark.sql.shuffle.partitions": str(low)},
-            )
-            spark = make_session()
-            low_med, low_errors = probe_block(
-                [n for n in CORE_SCALE if n in registry],
-                sf1_block["dir"],
-                n_passes=2,
-            )
-            high_med = sf1_block["queries_median"]
-            core_block = {
-                "dir": sf1_block["dir"],
-                "cpus_high": high,
-                "cpus_low": low,
-                "queries_median_low": low_med,
-                "queries_median_high": {
-                    n: high_med.get(n) for n in low_med
-                },
-                # >1 = the op ran faster with more cores; ~1 = fixed
-                # overhead still dominates even at sf1
-                "speedup_high_over_low": {
-                    n: round(v / high_med[n], 2)
-                    for n, v in low_med.items()
-                    if high_med.get(n)
-                },
-            }
-            if low_errors:
-                core_block["errors"] = low_errors
-        except Exception as e:  # noqa: BLE001 — probe must never sink the bench
-            core_block = {"error": f"{type(e).__name__}: {e}"}
+            low_blk = runner.block([n for n in CORE_SCALE if n in registry], sf1["dir"], passes=2)
         finally:
-            # restore the contract session for the sf2 probe + calibration
-            try:
-                spark.stop()
-            except Exception:  # noqa: BLE001
-                pass
-            make_session = functools.partial(get_spark, "chyme_bench")
-            spark = make_session()
-    flag_revived(core_block, since)
+            runner.restart(bench_session)  # the contract session, for sf2 + calibration
+        low_med = low_blk.pop("queries_median")
+        high_med = sf1["queries_median"]
+        return {
+            "dir": sf1["dir"],
+            "cpus_high": high,
+            "cpus_low": low,
+            "queries_median_low": low_med,
+            "queries_median_high": {n: high_med.get(n) for n in low_med},
+            # >1 = the op ran faster with more cores; ~1 = fixed
+            # overhead still dominates even at sf1
+            "speedup_high_over_low": {
+                n: round(v / high_med[n], 2) for n, v in low_med.items() if high_med.get(n)
+            },
+            **low_blk,
+        }
 
-    # --- 20x skew probe (VERDICT r7 #7) --------------------------------
-    # The candidate-generation ops whose cost is most sensitive to
-    # key-frequency skew (LSH bucket sizes, hot-gram postings) get a
-    # second probe at 20x: replication doubles every bucket again, so a
-    # super-linear candidate blow-up that 10x hides shows here. The
-    # scaled dirs are content-keyed caches (scaleup._src_fingerprint) —
-    # repeat runs skip generation entirely.
-    #
-    # x_ppjoin_setsim is deliberately NOT probed here: scaleup's
-    # replicated copies are J >= 0.95 near-dups of each other (the
-    # " copyseqN" suffix shifts one token in ~25), so the op's TRUE
-    # output grows quadratically with the factor (~190k pairs at sf0.1
-    # -> ~76M at 20x) — the probe would measure mandatory output
-    # explosion on pathological data, not operator scaling. Its scale
-    # story is pinned instead by the sf0.1 timing (35 s, r8 rewrite)
-    # and the plan gate (no SinglePartition, candidate-linear stages).
-    # r9 (VERDICT r8 #4): membership grown from 2 to 6 — the next most
-    # skew/shuffle-sensitive ops whose TRUE output stays corpus-linear
-    # under replication (unlike ppjoin, excluded above): the ExactSubstr
-    # span scrub (hot-gram postings), the salted exact-rank split, the
-    # explode-heavy DSIR pipeline, and the keyed dedup (replicated keys
-    # double every group).
-    # membership: module-scope SF2_SKEW (guarded by test_bench_battery)
-    _CLIFF20 = 3.0
-    sf2_block = None
-    since = revivals
-    if os.environ.get("SPARK_GRAFT_SF2", "1") != "0" and sf == "0.1":
+    # membership: the module-scope lists (guarded by test_bench_battery)
+    specs = [
+        ("rotation", rotation),
+        ("probe_base", probe_base),
+        ("sf1", lambda: scale(
+            SF1_HEAVY, 10, "SPARK_GRAFT_SF1", "SPARK_GRAFT_SF1_DIR", "/tmp/chyme_sf1"
+        )),
+        ("core_scaling", core_scaling),
+        ("sf2", lambda: scale(
+            SF2_SKEW, 20, "SPARK_GRAFT_SF2", "SPARK_GRAFT_SF2_DIR", "/tmp/chyme_sf2"
+        )),
+    ]
+    blocks: dict[str, dict] = {}
+    for key, build in specs:
         try:
-            from chyme_spark.scaleup import ensure_scaled
-
-            sf2_dir = os.environ.get("SPARK_GRAFT_SF2_DIR", "/tmp/chyme_sf2")
-            t0 = time.time()
-            ensure_scaled(spark, sf_dir, sf2_dir, factor=20)
-            gen2_sec = round(time.time() - t0, 3)
-
-            # fault-isolate per query: one OOM/regression must surface as
-            # that query's error, not sink the whole probe block (r8: the
-            # first sf2 run died wholesale and hid the working queries)
-            sf2_med, sf2_errors = probe_block(
-                [n for n in SF2_SKEW if n in registry], sf2_dir
-            )
-            ratio2 = {
-                n: round(v / probe_base[n], 1) if probe_base.get(n) else None
-                for n, v in sf2_med.items()
-            }
-            sf2_block = {
-                "dir": sf2_dir,
-                "factor": 20,
-                "gen_sec": gen2_sec,
-                "queries_median": sf2_med,
-                "ratio_vs_sf0.1": ratio2,
-                "flagged_scale_cliff": sorted(
-                    n for n, r in ratio2.items() if r is not None and r > _CLIFF20 * 20
-                ),
-            }
-            if sf2_errors:
-                sf2_block["errors"] = sf2_errors
-        except Exception as e:  # noqa: BLE001
-            sf2_block = {"error": f"{type(e).__name__}: {e}"}
-            revive_if_dead()
-    flag_revived(sf2_block, since)
+            blk = build()
+        except Exception as e:  # noqa: BLE001 — a probe must never sink the bench line
+            blk = {"error": _error(e)}
+            if runner.revive_if_dead():
+                blk["revived"] = True
+        if blk is not None:
+            blocks[key] = blk
 
     calibration = _cpu_calibration()
-    # calibration-normalized medians (VERDICT r6 #6): per-query median
-    # divided by the host-speed constant, so cross-round comparisons are
-    # self-serve — compare `queries_median_calibrated` directly between
-    # BENCH_r{N}.json files and host drift cancels out (unit: multiples
-    # of the calibration workload, not seconds)
+    # calibration-normalized medians: per-query median divided by the
+    # host-speed constant, so cross-round comparisons are self-serve —
+    # compare `queries_median_calibrated` directly between BENCH_r{N}.json
+    # files and host drift cancels out (unit: multiples of the
+    # calibration workload, not seconds)
     calibrated = {n: round(v / calibration, 2) for n, v in steady.items()}
     out = {
         "metric": "headline_queries_total_wall_clock",
@@ -705,27 +640,15 @@ def main() -> None:
         "cpu_calibration_sec": calibration,
         "queries_median_calibrated": calibrated,
         "steady_total_calibrated": round(sum(calibrated.values()), 2),
+        "master": main_master,
+        "shuffle_partitions": main_shuffle_parts,
+        **blocks,
     }
-    # scaling-contract fields (VERDICT r15 #2): the effective master and
-    # shuffle-partition count the headline battery actually ran under,
-    # so the driver can verify $SPARK_GRAFT_CPUS is honored mechanically
-    out["master"] = main_master
-    out["shuffle_partitions"] = main_shuffle_parts
-    if base_block is not None:
-        out["probe_base"] = base_block
-    if sf1_block is not None:
-        out["sf1"] = sf1_block
-    if sf2_block is not None:
-        out["sf2"] = sf2_block
-    if core_block is not None:
-        out["core_scaling"] = core_block
-    if rot_block is not None:
-        out["rotation"] = rot_block
     print(json.dumps(out))
-    # Compact headline line LAST (VERDICT r7 #2): the driver records only
-    # a bounded stdout tail, and the full JSON above outgrew it in r5-r7
-    # ("parsed": null). This line is small enough to always land inside
-    # any tail window, so the headline metrics stay machine-readable.
+    # Compact headline line: the driver records only a bounded stdout
+    # tail, and the full JSON above outgrew it. This line is small enough
+    # to always land inside any tail window, so the headline metrics stay
+    # machine-readable.
     summary = {
         "steady_total": out["steady_total"],
         "cpu_calibration_sec": out["cpu_calibration_sec"],
@@ -737,20 +660,21 @@ def main() -> None:
         "master": main_master,
         "shuffle_partitions": main_shuffle_parts,
     }
-    if core_block and "speedup_high_over_low" in core_block:
-        sp = core_block["speedup_high_over_low"].values()
+    core = blocks.get("core_scaling", {})
+    if "speedup_high_over_low" in core:
+        sp = core["speedup_high_over_low"].values()
         summary["core_scaling_speedup_max"] = max(sp) if sp else None
-        summary["core_scaling_cpus"] = (
-            f"{core_block['cpus_low']}->{core_block['cpus_high']}"
-        )
-    for key, blk in (("sf1", sf1_block), ("sf2", sf2_block)):
-        if blk and "ratio_vs_sf0.1" in blk:
+        summary["core_scaling_cpus"] = f"{core['cpus_low']}->{core['cpus_high']}"
+    for key in ("sf1", "sf2"):
+        blk = blocks.get(key, {})
+        if "ratio_vs_sf0.1" in blk:
             ratios = [r for r in blk["ratio_vs_sf0.1"].values() if r is not None]
             summary[f"{key}_ratio_max"] = max(ratios) if ratios else None
             summary[f"{key}_flagged"] = blk["flagged_scale_cliff"]
-    if rot_block and "queries_median" in rot_block:
-        summary["rotation_n"] = len(rot_block["queries_median"])
-        summary["rotation_total"] = round(sum(rot_block["queries_median"].values()), 3)
+    rot = blocks.get("rotation", {})
+    if "queries_median" in rot:
+        summary["rotation_n"] = len(rot["queries_median"])
+        summary["rotation_total"] = round(sum(rot["queries_median"].values()), 3)
     print("BENCH_SUMMARY " + json.dumps(summary))
     print(final_line(summary, steady))
 

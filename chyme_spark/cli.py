@@ -82,7 +82,7 @@ def _ingest_follow(spark, args) -> int:
     high-water KEY and an unchanged bucket costs one empty
     ListObjectsV2 page per poll instead of a full re-list (see
     sources.ListingStreamReader)."""
-    from chyme_spark.catalog import ingest as _ingest
+    from chyme_spark.filters import compile_filter
     from chyme_spark.sources import register_listing_source
 
     register_listing_source(spark)
@@ -100,14 +100,11 @@ def _ingest_follow(spark, args) -> int:
             print(f"error: --s3-option expects KEY=VALUE, got {kv!r}", file=sys.stderr)
             return 2
         rd = rd.option(f"s3.{k}", v)
+    wanted = compile_filter(args.filter)
     counts = {"n": 0}
 
     def process(batch_df, _batch_id: int) -> None:
-        catalog = _ingest(batch_df.select("url"), args.filter)
-        existing = tables.read(spark, "catalog", args.catalog)
-        if existing is not None:
-            catalog = catalog.join(existing.select("url"), "url", "left_anti")
-        counts["n"] += _append_counted(catalog, args.catalog)
+        counts["n"] += _catalog_new(spark, batch_df.select("url"), wanted, args.catalog)[0]
 
     ckpt = args.follow_checkpoint or f"{args.catalog.rstrip('/')}_stream_ckpt"
     writer = (
@@ -134,7 +131,7 @@ def _ingest_once(
 
     Raises ValueError on a bad filter string — callers map it to their
     transport's error convention (exit code 2 / response err field)."""
-    from chyme_spark.catalog import list_files, well_formed, with_resource_columns
+    from chyme_spark.catalog import list_files
     from chyme_spark.filters import compile_filter
 
     # building the Column requires an active session, so validate
@@ -156,15 +153,26 @@ def _ingest_once(
         urls = spark.createDataFrame([(root,)], "url string")
     else:
         urls = list_files(spark, root, recursion).select("url")
-    # catalog.ingest's rows (well-formed, wanted, one per url, not yet
-    # cataloged), from ONE pass over the listing: the write job counts
-    # the appended rows and the malformed ones, so nothing is cached and
-    # no second job re-lists. The malformed rows ride along through the
-    # dedup and the anti-join (neither can drop one: a url is malformed
-    # or not as a whole, and the catalog holds none) to be counted in
-    # the write's final stage — an observed metric below a shuffle is
-    # lost when adaptive execution replaces that shuffle's empty output
-    # (nothing wanted, say) with an empty relation.
+    return _catalog_new(spark, urls, wanted, catalog_path)
+
+
+def _catalog_new(spark, urls, wanted, catalog_path: str) -> tuple[int, int]:
+    """Append the listed ``urls`` that are well-formed, ``wanted`` and
+    not yet cataloged to the catalog at ``catalog_path``; returns (n
+    appended, n malformed). The tail of both ingest paths: the batch
+    pass and each micro-batch of ``--follow``.
+
+    These are catalog.ingest's rows (well-formed, wanted, one per url,
+    not yet cataloged) from ONE pass over the listing: the write job
+    counts the appended rows and the malformed ones, so nothing is
+    cached and no second job re-lists. The malformed rows ride along
+    through the dedup and the anti-join (neither can drop one: a url is
+    malformed or not as a whole, and the catalog holds none) to be
+    counted in the write's final stage — an observed metric below a
+    shuffle is lost when adaptive execution replaces that shuffle's
+    empty output (nothing wanted, say) with an empty relation."""
+    from chyme_spark.catalog import well_formed, with_resource_columns
+
     ok = well_formed()
     rows = with_resource_columns(urls).filter(wanted | ~ok).dropDuplicates(["url"])
     # dedup against what's already cataloged (idempotent re-ingest)

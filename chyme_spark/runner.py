@@ -15,7 +15,7 @@ one Arrow batch of tasks per Python worker, workspace on executor-local
 disk, results (ledger rows + quarantine rows) returned as a DataFrame.
 Spark's scheduler replaces the visibility-timeout dance: a failed
 partition is retried by the engine, and idempotence comes from the
-ledger anti-join upstream (tasker.create_tasks).
+work queue upstream (``cli.pending``: tasks less ledger and quarantine).
 
 Scale: parallelism = partitions (configure with ``repartition`` before
 calling); no driver involvement per task; executor-local scratch only.
@@ -147,12 +147,9 @@ class Loader:
         the byte-counting contract of the plain-file paths)."""
         total = 0
         with tarfile.open(fileobj=fileobj, mode="w|") as tf:
-            for root, dirs, files in os.walk(src_dir):
-                dirs.sort()  # deterministic member order
-                for name in sorted(files):
-                    p = os.path.join(root, name)
-                    tf.add(p, arcname=os.path.relpath(p, src_dir))
-                    total += os.path.getsize(p)
+            for p, rel in walk_files(src_dir):
+                tf.add(p, arcname=rel)
+                total += os.path.getsize(p)
         return total
 
 

@@ -169,14 +169,6 @@ try:  # Python Data Source API needs pyspark >= 4.0
         workers)."""
         return {k[3:]: v for k, v in options.items() if k.startswith("s3.")}
 
-    def _fs_for(root: str, s3_opts: dict):
-        """(filesystem, base path) honoring explicit s3 options —
-        delegates to the single resolver in catalog.py (round-6 review:
-        three near-identical copies had started to drift)."""
-        from chyme_spark.catalog import _resolve_fs
-
-        return _resolve_fs(root, s3_opts)
-
     class ListingReader(DataSourceReader):
         """Batch face of the lister. :meth:`partitions` lists the root's
         own page on the driver (``catalog.list_top``): its file rows
@@ -397,36 +389,45 @@ try:  # Python Data Source API needs pyspark >= 4.0
                 kwargs["ContinuationToken"] = token
 
         def _list(self):
+            """Walk the tree through the directory-mtime memo; yields
+            (url, size, mtime) rows under the batch listers' root and row
+            rules (``catalog.open_listing``, ``catalog._listed``)."""
             import time
 
             from pyarrow import fs as pafs
 
-            root = self.root if "://" in self.root else f"file://{self.root}"
-            scheme = root.split("://", 1)[0]
-            fs, base = _fs_for(root, self.s3_opts)
-            base = base.rstrip("/")
+            from chyme_spark.catalog import _listed, _row, open_listing
+
+            fs, scheme, base = open_listing(self.root, self.s3_opts)
             base_depth = base.count("/")
             now_ns = time.time_ns()
+
+            def row(info) -> tuple:
+                url, size, mtime = _row(scheme, info)
+                return url, size, mtime or 0  # the offsets compare mtimes
 
             def list_dir(path):
                 """One non-recursive listing -> (file rows, subdirs with mtimes)."""
                 self.n_dir_lists += 1
                 files, subs = [], []
                 for i in fs.get_file_info(pafs.FileSelector(path, recursive=False)):
-                    if i.type == pafs.FileType.File:
+                    if _listed(scheme, i):
                         if (
                             self.max_depth is not None
                             and (i.path.count("/") - base_depth - 1) > self.max_depth
                         ):
                             continue
-                        mt = i.mtime_ns // 1_000_000 if i.mtime_ns is not None else 0
-                        files.append((f"{scheme}://{i.path}", i.size, mt))
+                        files.append(row(i))
                     elif i.type == pafs.FileType.Directory:
                         subs.append((i.path, i.mtime_ns))
                 return files, subs
 
             self.n_dir_stats += 1
             root_info = fs.get_file_info(base)
+            if root_info.type == pafs.FileType.File:  # a one-file root lists as that file
+                if _listed(scheme, root_info):
+                    yield row(root_info)
+                return
             stack = [(base, root_info.mtime_ns)]
             while stack:
                 path, mtime = stack.pop()

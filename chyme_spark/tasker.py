@@ -8,8 +8,8 @@ against the processed ledger, fan out through the templates, and append
 to the tasks table — exactly-once by construction, because the write
 either commits or the whole deterministic plan re-runs.
 
-Scale: the ledger anti-join is the only shuffle; when the ledger is
-small relative to the catalog it is broadcast. The template fan-out is
+Scale: the ledger's distinct task hashes are broadcast into the
+anti-join, so the catalog side never shuffles. The template fan-out is
 narrow.
 """
 
@@ -38,7 +38,6 @@ def create_tasks(
     catalog: DataFrame,
     ledger: DataFrame | None = None,
     templates: tuple[Template, ...] = DEFAULT_TEMPLATES,
-    broadcast_ledger: bool = True,
 ) -> DataFrame:
     """catalog -> new (not-yet-processed) task rows.
 
@@ -48,7 +47,5 @@ def create_tasks(
     tasks = expand(catalog, templates)
     if ledger is None:
         return tasks
-    seen = ledger.select("task_hash").distinct()
-    if broadcast_ledger:
-        seen = F.broadcast(seen)
+    seen = F.broadcast(ledger.select("task_hash").distinct())
     return tasks.join(seen, "task_hash", "left_anti")

@@ -1,4 +1,5 @@
-"""Bench-battery membership guards (r9 review finding #3).
+"""Bench-battery membership guards (r9 review finding #3), the final
+line's contract, and the probe runner's fault isolation.
 
 bench.py's ROTATION cohort and tools/bench_ledger.json's current-round
 entry are two hand-maintained copies of the same list; and every probe
@@ -115,3 +116,60 @@ def test_final_line_is_bounded_pure_json():
     big = json.loads(big_line)
     assert len(big_line) < 1900
     assert "queries_dropped" in big and big["steady_total"] == 12.3
+
+
+def test_probe_block_isolates_failures_and_rewarms_after_a_revival():
+    """The one probe runner, on stub timings and a stub context (no
+    Spark): a member that throws is dropped with its error recorded;
+    one that also stops the context revives it once, and the survivors
+    are re-warmed on the fresh context before the next timed pass, so
+    no cold run lands in a median; the block is flagged revived."""
+    calls: list[str] = []
+    state = {"dead": False, "revivals": 0, "pass": 0}
+    seconds = {"a": [9.0, 1.0, 2.0, 3.0], "b": [9.0, 4.0]}
+
+    def time_one(name):
+        calls.append(name)
+        if name == "bad":
+            raise ValueError("boom")
+        if name == "killer":
+            if state["pass"] == 0:  # survives its warm run
+                state["pass"] = 1
+                return 0.5
+            state["dead"] = True
+            raise RuntimeError("SparkContext was shut down")
+        assert not state["dead"], "ran a member on a dead context"
+        # a re-warm is untimed: its seconds never reach the median
+        return seconds[name].pop(0) if seconds[name] else 5.0
+
+    def revive_if_dead():
+        dead = state["dead"]
+        if dead:
+            state["dead"] = False
+            state["revivals"] += 1
+            calls.append("<revive>")
+        return dead
+
+    block = bench.probe_block(["a", "bad", "killer", "b"], time_one, revive_if_dead, passes=3)
+
+    assert state["revivals"] == 1
+    assert block["revived"] is True
+    assert set(block["errors"]) == {"bad", "killer"}
+    assert block["errors"]["bad"] == "ValueError: boom"
+    assert block["errors"]["killer"].startswith("RuntimeError: ")
+    # warm a, bad, killer, b; pass 1: a (timed) then killer dies ->
+    # revive -> re-warm a and b -> b (timed) -> passes 2 and 3
+    assert calls == [
+        "a", "bad", "killer", "b",
+        "a", "killer", "<revive>", "a", "b", "b",
+        "a", "b",
+        "a", "b",
+    ]
+    # a: warm 9.0, timed 1.0, re-warm 2.0 (untimed), timed 3.0, 5.0;
+    # b: warm 9.0, re-warm 4.0 (untimed), timed 5.0 x3
+    assert block["queries_median"] == {"a": 3.0, "b": 5.0}
+
+
+def test_probe_block_without_a_death_is_not_flagged():
+    block = bench.probe_block(["a"], lambda n: 1.0, lambda: False, passes=2)
+    assert block == {"queries_median": {"a": 1.0}}

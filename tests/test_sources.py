@@ -87,15 +87,16 @@ def _expected(root, depth=None) -> set:
 
 
 def test_distributed_listing_matches_driver_listing(spark, tmp_path):
-    """list_files (driver) and the chyme_listing source (executors) run
-    one walk: both must list exactly the expected files for every depth
-    bound and root form — plain, file:// and relative roots, a root
-    that is a single file — and hide `.<name>.crc` checksum files, as
-    Hadoop's local filesystem did."""
+    """list_files (driver), the chyme_listing source (executors) and the
+    streaming reader's first batch share one set of root and row rules:
+    all must list exactly the expected files for every depth bound and
+    root form — plain, file:// and relative roots, a root that is a
+    single file — and hide `.<name>.crc` checksum files, as Hadoop's
+    local filesystem did."""
     import os
 
     from chyme_spark.catalog import list_files
-    from chyme_spark.sources import register_listing_source
+    from chyme_spark.sources import ListingStreamReader, register_listing_source
 
     root = _deep_tree(tmp_path)
     # relative to the working directory the session (and its Python
@@ -107,13 +108,22 @@ def test_distributed_listing_matches_driver_listing(spark, tmp_path):
         rd = spark.read.format("chyme_listing").option("path", r)
         if depth is not None:
             rd = rd.option("depth", str(depth))
-        return rd.load()
+        return rd.load().collect()
+
+    def driver(_spark, r, depth):
+        return list_files(spark, r, depth).collect()
+
+    def stream(_spark, r, depth):
+        options = {"path": r} if depth is None else {"path": r, "depth": str(depth)}
+        reader = ListingStreamReader(options)
+        rows, _offset = reader.read(reader.initialOffset())
+        return list(rows)
 
     for depth in (None, 0, 1, 2):
         want = _expected(root, depth)
         for r in (str(root), f"file://{root}", rel):
-            for lister in (list_files, source):
-                got = {tuple(row) for row in lister(spark, r, depth).collect()}
+            for lister in (driver, source, stream):
+                got = {tuple(row) for row in lister(spark, r, depth)}
                 assert got == want, (lister, r, depth)
     assert {u.rsplit("/", 1)[-1] for u, _s, _m in _expected(root)} == {
         "top.txt", "one.txt", "two.txt", "three.txt", "four.txt", "five.txt",
@@ -122,8 +132,8 @@ def test_distributed_listing_matches_driver_listing(spark, tmp_path):
     one = root / "a" / "b" / "two.txt"
     want = {(f"file://{one}", 7, one.stat().st_mtime_ns // 1_000_000)}
     for r in (str(one), f"file://{one}", f"{rel}/a/b/two.txt"):
-        for lister in (list_files, source):
-            assert {tuple(row) for row in lister(spark, r, None).collect()} == want, (lister, r)
+        for lister in (driver, source, stream):
+            assert {tuple(row) for row in lister(spark, r, None)} == want, (lister, r)
 
 
 def test_listing_datasource_matches_driver_listing(spark, tmp_path):

@@ -4,7 +4,7 @@ The per-round bench rotation retires the never-benched backlog at ~14
 names/round — ~12 rounds of debt at round 11's count (VERDICT r11,
 "What's missing" #2). This tool records a builder-side timing for EVERY
 registry query in one pass instead: 1 warm + N timed noop-sink runs per
-query (median), fault-isolated like bench.py's probe_block, written to
+query (median), run by bench.py's fault-isolated probe runner, written to
 a JSON artifact (tools/bench_census_r{N}.json).
 
 This is NOT the driver bench and does not replace the rotation's
@@ -20,10 +20,10 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -50,43 +50,21 @@ def main() -> int:
     if not args.out and not args.round:
         ap.error("--round is required when --out is not given")
 
+    from bench import Runner
     from chyme_spark.registry import load_all
     from chyme_spark.session import get_spark
 
     registry = load_all()
-    spark = get_spark("chyme_census")
-
-    def run(name: str) -> float:
-        t0 = time.time()
-        df = registry[name].fn(spark, args.sf)
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    def revive_if_dead() -> None:
-        nonlocal spark
-        try:
-            dead = spark.sparkContext._jsc.sc().isStopped()
-        except Exception:  # noqa: BLE001
-            dead = True
-        if dead:
-            try:
-                spark.stop()
-            except Exception:  # noqa: BLE001
-                pass
-            spark = get_spark("chyme_census")
+    runner = Runner(registry, functools.partial(get_spark, "chyme_census"))
 
     medians: dict[str, float] = {}
     errors: dict[str, str] = {}
     for i, name in enumerate(sorted(registry)):
-        try:
-            run(name)  # warm (footers, codegen)
-            ts = sorted(run(name) for _ in range(args.passes))
-            mid = len(ts) // 2
-            med = ts[mid] if len(ts) % 2 else (ts[mid - 1] + ts[mid]) / 2
-            medians[name] = round(med, 3)
-        except Exception as e:  # noqa: BLE001 — census must finish
-            errors[name] = f"{type(e).__name__}: {e}"[:300]
-            revive_if_dead()
+        # one one-member block per query: warm + N timed passes, and a
+        # failure costs this query only (the runner revives the session)
+        blk = runner.block([name], args.sf, passes=args.passes)
+        medians.update(blk["queries_median"])
+        errors.update(blk.get("errors", {}))
         print(
             f"[{i + 1}/{len(registry)}] {name}: "
             f"{medians.get(name, errors.get(name))}",
@@ -122,30 +100,29 @@ def main() -> int:
             and med / prev[name] > 2.0
         )
         for name in movers:
-            try:
-                run(name)  # re-warm after the sweep
-                iso = sorted(run(name) for _ in range(3))[1]
-            except Exception as e:  # noqa: BLE001
+            # re-warm after the sweep, then a 3-pass median
+            blk = runner.block([name], args.sf, passes=3)
+            if name not in blk["queries_median"]:
                 # the suspect sweep median stays in queries_median (a
                 # number beats a hole), but the artifact must SAY it is
                 # unadjudicated — otherwise next round's census uses it
                 # as prev_census and the >2x rule can never re-fire on
-                # this query (r15 review)
+                # this query
+                err = blk["errors"][name]
                 adjudication[name] = {
                     "prev_census": prev[name],
                     "sweep_median": medians[name],
                     "isolated_median": None,
-                    "note": f"re-measure failed: {type(e).__name__}",
+                    "note": f"re-measure failed: {err.split(':', 1)[0]}",
                 }
-                errors[name] = f"adjudication: {type(e).__name__}: {e}"[:300]
-                revive_if_dead()
+                errors[name] = f"adjudication: {err}"[:300]
                 continue
             adjudication[name] = {
                 "prev_census": prev[name],
                 "sweep_median": medians[name],
-                "isolated_median": round(iso, 3),
+                "isolated_median": blk["queries_median"][name],
             }
-            medians[name] = round(iso, 3)
+            medians[name] = blk["queries_median"][name]
             print(
                 f"[adjudicate] {name}: sweep {adjudication[name]['sweep_median']}"
                 f" vs prev {prev[name]} -> isolated {medians[name]}",

@@ -5,7 +5,8 @@ For each named query, runs noop-sink timed passes against a HOT fixture
 volume-matched CONTROL fixture, and reports the per-query medians plus
 the hot/ctl ratio. A ratio well above 1 on identical row counts and
 bytes means the hot key serializes work (straggler); ~1 means the shape
-absorbs the skew at this scale.
+absorbs the skew at this scale. Timings use bench.py's ``Runner.time``
+(query construction + noop sink).
 
 Usage:
     python tools/probe_hotkey.py --hot /tmp/chyme_hot --ctl /tmp/chyme_ctl \
@@ -17,18 +18,12 @@ Prints one JSON line.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def median(xs: list[float]) -> float:
-    s = sorted(xs)
-    mid = len(s) // 2
-    return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
 
 
 def main() -> int:
@@ -39,6 +34,7 @@ def main() -> int:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
+    from bench import Runner, median
     from chyme_spark.registry import load_all
     from chyme_spark.session import get_spark
 
@@ -46,26 +42,17 @@ def main() -> int:
     unknown = [n for n in args.names if n not in registry]
     if unknown:
         ap.error(f"not registered: {unknown}")
-    spark = get_spark("probe_hotkey")
-
-    def run(name: str, d: str) -> float:
-        spark.sparkContext.setJobDescription(f"hotkey:{name}:{os.path.basename(d)}")
-        # time construction + noop (bench.py's convention): queries with
-        # eager staging (localCheckpoint) must charge it to the timing
-        t0 = time.time()
-        df = registry[name].fn(spark, d)
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+    runner = Runner(registry, functools.partial(get_spark, "probe_hotkey"))
 
     out: dict[str, dict] = {}
     for name in args.names:
         for d in (args.ctl, args.hot):  # warm passes
-            run(name, d)
+            runner.time(name, d)
         ctl_ts = []
         hot_ts = []
         for _ in range(args.passes):  # interleave to share host weather
-            ctl_ts.append(run(name, args.ctl))
-            hot_ts.append(run(name, args.hot))
+            ctl_ts.append(runner.time(name, args.ctl))
+            hot_ts.append(runner.time(name, args.hot))
         c, h = median(ctl_ts), median(hot_ts)
         out[name] = {
             "ctl_sec": round(c, 3),

@@ -1,24 +1,27 @@
-"""Isolated 3-pass steady-state probe for a set of batch queries.
+"""Isolated steady-state probe for a set of registered queries.
 
 Usage: python tools/probe_queries.py [--sf DIR] [--passes N] name [name...]
 
-Methodology matches bench.py: noop sink (full evaluation of every
-output column), one warm pass (JIT + parquet footers), then N timed
-passes per query with the per-query MEDIAN reported — the number a
-round's OPTIMIZATION_r*.md quotes as a before/after. Run on an idle
-host: the r14/r15 census-mover adjudications all traced inflated
-readings to concurrent Spark JVMs.
+One block of bench.py's fault-isolated probe runner: noop sink (full
+evaluation of every output column, query construction included), one
+warm pass (JIT + parquet footers), then N timed passes per query with
+the per-query MEDIAN reported — the number a round's OPTIMIZATION_r*.md
+quotes as a before/after. A query that fails is reported under
+``errors`` and the rest are still timed. Run on an idle host: the
+r14/r15 census-mover adjudications all traced inflated readings to
+concurrent Spark JVMs.
 
-Prints one JSON line: {"sf": ..., "passes": N, "queries": {name: median_sec}}
+Prints one JSON line:
+    {"sf": ..., "passes": N, "queries": {name: median_sec}[, "errors": ..., "revived": true]}
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,6 +33,7 @@ def main() -> int:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
+    from bench import Runner
     from chyme_spark.registry import load_all
     from chyme_spark.session import get_spark
 
@@ -37,33 +41,10 @@ def main() -> int:
     unknown = [n for n in args.names if n not in registry]
     if unknown:
         ap.error(f"not registered: {unknown}")
-    spark = get_spark("probe_queries")
-
-    def run(name: str) -> float:
-        spark.sparkContext.setJobDescription(f"probe:{name}")
-        df = registry[name].fn(spark, args.sf)
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    for name in args.names:  # warm pass, untimed
-        run(name)
-    times: dict[str, list[float]] = {n: [] for n in args.names}
-    for _ in range(args.passes):
-        for name in args.names:
-            times[name].append(run(name))
-
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-
-    print(json.dumps({
-        "sf": args.sf,
-        "passes": args.passes,
-        "queries": {n: round(median(ts), 3) for n, ts in times.items()},
-        "spread": {n: round(max(ts) - min(ts), 3) for n, ts in times.items()},
-    }))
+    runner = Runner(registry, functools.partial(get_spark, "probe_queries"))
+    blk = runner.block(args.names, args.sf, passes=args.passes)
+    blk["queries"] = blk.pop("queries_median")
+    print(json.dumps({"sf": args.sf, "passes": args.passes, **blk}))
     return 0
 
 
