@@ -73,17 +73,27 @@ def split_malformed(catalog: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def _resolve_fs(url: str, s3_options: dict | None = None):
-    """(filesystem, path) for a URL; explicit ``s3_options`` (a dict of
-    ``pyarrow.fs.S3FileSystem`` kwargs — endpoint_override, access_key,
-    role_arn, ...) override the ambient env/instance-profile chain, the
-    engine-side hook for the reference's credential bootstrap (R40, ref
-    ``cmd/util.go:21-57``). A plain dict, so it pickles cleanly into
-    executor closures."""
-    from urllib.parse import urlparse
+    """(filesystem, path) for a URL — the one rule every lister and
+    loader resolves through.
 
-    parsed = urlparse(url)
-    if s3_options and parsed.scheme in ("s3", "s3a"):
-        return pafs.S3FileSystem(**s3_options), f"{parsed.netloc}{parsed.path}".rstrip("/")
+    The path is the RAW text after ``scheme://``, never URI-parsed, for
+    ``file://`` and for ``s3``/``s3a`` with explicit options: the listers
+    write URLs as ``scheme://`` + raw path (:func:`_row`), so a space,
+    ``%``, ``#`` or ``?`` in a name round-trips instead of being decoded,
+    rejected or cut off as a fragment. Trailing slashes are dropped.
+    Every other scheme (ambient-credential s3, hdfs) goes through
+    ``FileSystem.from_uri``.
+
+    Explicit ``s3_options`` (a dict of ``pyarrow.fs.S3FileSystem``
+    kwargs — endpoint_override, access_key, role_arn, ...) override the
+    ambient env/instance-profile chain, the engine-side hook for the
+    reference's credential bootstrap (R40, ref ``cmd/util.go:21-57``).
+    A plain dict, so it pickles cleanly into executor closures."""
+    scheme, _, raw = url.partition("://")
+    if scheme == "file":
+        return pafs.LocalFileSystem(), raw.rstrip("/") or "/"
+    if s3_options and scheme in ("s3", "s3a"):
+        return pafs.S3FileSystem(**s3_options), raw.rstrip("/")
     return pafs.FileSystem.from_uri(url)
 
 

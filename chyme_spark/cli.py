@@ -534,6 +534,18 @@ def cmd_convert(args) -> int:
     return 0
 
 
+def _show_and_count(df, show: int) -> int:
+    """Print ``show`` rows and the row count of ``df``; cached, since
+    show + count would otherwise run the whole plan twice."""
+    df = df.cache()
+    try:
+        df.show(show, truncate=False)
+        print(f"{df.count()} rows")
+    finally:
+        df.unpersist()
+    return 0
+
+
 def cmd_query(args) -> int:
     from chyme_spark.registry import load_all
 
@@ -542,14 +554,7 @@ def cmd_query(args) -> int:
         print(f"unknown query {args.name!r}; see ls-queries", file=sys.stderr)
         return 2
     spark = get_spark("chyme_query")
-    df = registry[args.name].fn(spark, args.sf).cache()
-    try:
-        # cache: show + count would otherwise run the whole plan twice
-        df.show(args.show, truncate=False)
-        print(f"{df.count()} rows")
-    finally:
-        df.unpersist()
-    return 0
+    return _show_and_count(registry[args.name].fn(spark, args.sf), args.show)
 
 
 def cmd_sql(args) -> int:
@@ -569,14 +574,7 @@ def cmd_sql(args) -> int:
     df = spark.sql(args.statement)
     if args.explain:
         df.explain("formatted")
-    df = df.cache()
-    try:
-        # cache: show + count would otherwise run the whole plan twice
-        df.show(args.show, truncate=False)
-        print(f"{df.count()} rows")
-    finally:
-        df.unpersist()
-    return 0
+    return _show_and_count(df, args.show)
 
 
 def query_counts() -> tuple[int, int, int]:

@@ -17,6 +17,12 @@ Spark's scheduler replaces the visibility-timeout dance: a failed
 partition is retried by the engine, and idempotence comes from the
 work queue upstream (``cli.pending``: tasks less ledger and quarantine).
 
+One loader moves bytes for every real scheme: ``file://``, ``s3://`` and
+``hdfs://`` all map to :class:`ArrowFsLoader`, which turns a URL into
+(filesystem, path) with the listers' own rule (``catalog._resolve_fs``),
+so any URL the catalog holds is one the worker can fetch. Phony
+resources skip transfer (:class:`PhonyLoader`).
+
 Scale: parallelism = partitions (configure with ``repartition`` before
 calling); no driver involvement per task; executor-local scratch only.
 The Docker executor drives the ``docker`` CLI with the reference's
@@ -153,42 +159,6 @@ class Loader:
         return total
 
 
-class FileLoader(Loader):
-    """file:// transfers — the testable stand-in for the S3 loader."""
-
-    def download(self, url: str, dest_dir: str) -> int:
-        src = urlparse(url).path
-        total = 0
-        if os.path.isdir(src):
-            for p, rel in walk_files(src):
-                out = os.path.join(dest_dir, rel)
-                os.makedirs(os.path.dirname(out) or dest_dir, exist_ok=True)
-                shutil.copy(p, out)
-                total += os.path.getsize(p)
-        elif src.endswith(".tar"):
-            with open(src, "rb") as f:
-                total = self._extract_tar(f, dest_dir)
-        else:
-            shutil.copy(src, os.path.join(dest_dir, os.path.basename(src)))
-            total = os.path.getsize(src)
-        return total
-
-    def upload(self, src_dir: str, url: str) -> int:
-        dest = urlparse(url).path
-        if dest.endswith(".tar"):
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            with open(dest, "wb") as f:
-                return self._pack_tar(src_dir, f)
-        os.makedirs(dest, exist_ok=True)
-        total = 0
-        for p, rel in walk_files(src_dir):
-            out = os.path.join(dest, rel)
-            os.makedirs(os.path.dirname(out) or dest, exist_ok=True)
-            shutil.copy(p, out)
-            total += os.path.getsize(p)
-        return total
-
-
 class PhonyLoader(Loader):
     """No-op transfers (ref phony loader internal/core/loader.go:93-117)."""
 
@@ -200,8 +170,10 @@ class PhonyLoader(Loader):
 
 
 class ArrowFsLoader(Loader):
-    """Scheme-generic object-store loader over ``pyarrow.fs`` — the real
-    transfer path for s3:// (and hdfs://, gcs via mounts, file://).
+    """Scheme-generic loader over ``pyarrow.fs`` — the one transfer path
+    for every real scheme: file://, s3:// and hdfs:// (gcs via mounts).
+    URLs resolve through ``catalog._resolve_fs``, the rule the listers
+    use, so a URL the catalog wrote names the file this loader reads.
 
     Parity target: the reference's S3 download/upload
     (ref ``internal/core/loader.go:148-286``) and exists/size/delete
@@ -240,9 +212,7 @@ class ArrowFsLoader(Loader):
         self.s3_options = dict(s3_options or {})
 
     def _resolve(self, url: str):
-        # single filesystem resolver (round-6 review: three drifting
-        # copies); catalog._resolve_fs honors explicit s3 options and
-        # falls back to FileSystem.from_uri
+        # the listers' URL rule (raw file:// paths, explicit s3 options)
         from chyme_spark.catalog import _resolve_fs
 
         return _resolve_fs(url, self.s3_options)
@@ -284,27 +254,32 @@ class ArrowFsLoader(Loader):
 
     def upload(self, src_dir: str, url: str) -> int:
         fs, path = self._resolve(url)
-        if path.endswith(".tar"):
-            # dir -> object(.tar): stream-pack straight into the (multipart
-            # on s3) output stream (ref loader.go:258, unimplemented there)
-            parent = path.rsplit("/", 1)[0]
-            if parent and fs.type_name not in ("s3", "gcs", "abfs"):
-                fs.create_dir(parent, recursive=True)
-            with fs.open_output_stream(path) as dst:
-                return self._pack_tar(src_dir, dst)
         # Object stores have no directories: pyarrow's S3FileSystem
         # implements create_dir as a zero-byte "<path>/" marker object,
         # which pollutes the bucket (billions of empty keys at 100 TB
         # scale) and double-counts in prefix listings. The reference
         # does plain PUTs with no markers (ref pkg/aws/s3.go:91-162);
         # open_output_stream materializes the key directly, so only
-        # real filesystems (local/hdfs) need the mkdir.
-        if fs.type_name not in ("s3", "gcs", "abfs"):
+        # real filesystems (local/hdfs) create each key's parent.
+        has_dirs = fs.type_name not in ("s3", "gcs", "abfs")
+
+        def put(key: str):
+            parent = key.rpartition("/")[0]
+            if has_dirs and parent:
+                fs.create_dir(parent, recursive=True)
+            return fs.open_output_stream(key)
+
+        if path.endswith(".tar"):
+            # dir -> object(.tar): stream-pack straight into the (multipart
+            # on s3) output stream (ref loader.go:258, unimplemented there)
+            with put(path) as dst:
+                return self._pack_tar(src_dir, dst)
+        if has_dirs:  # an empty workspace still leaves its destination
             fs.create_dir(path, recursive=True)
         total = 0
         for p, rel in walk_files(src_dir):
             key = rel.replace(os.sep, "/")
-            with open(p, "rb") as src, fs.open_output_stream(f"{path}/{key}") as dst:
+            with open(p, "rb") as src, put(f"{path}/{key}") as dst:
                 while chunk := src.read(self._CHUNK):
                     dst.write(chunk)
                     total += len(chunk)
@@ -328,7 +303,7 @@ class ArrowFsLoader(Loader):
 
 
 DEFAULT_LOADERS: dict[str, Callable[[], Loader]] = {
-    "file": FileLoader,
+    "file": ArrowFsLoader,
     "phony": PhonyLoader,
     "s3": ArrowFsLoader,
     "hdfs": ArrowFsLoader,

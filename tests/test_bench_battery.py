@@ -1,5 +1,6 @@
 """Bench-battery membership guards (r9 review finding #3), the final
-line's contract, and the probe runner's fault isolation.
+line's contract, the probe runner's fault isolation, and the census's
+same-scale yardstick.
 
 bench.py's ROTATION cohort and tools/bench_ledger.json's current-round
 entry are two hand-maintained copies of the same list; and every probe
@@ -173,3 +174,25 @@ def test_probe_block_isolates_failures_and_rewarms_after_a_revival():
 def test_probe_block_without_a_death_is_not_flagged():
     block = bench.probe_block(["a"], lambda n: 1.0, lambda: False, passes=2)
     assert block == {"queries_median": {"a": 1.0}}
+
+
+def test_census_adjudicates_only_against_the_same_scale(tmp_path):
+    """The mover adjudication's yardstick is the latest earlier census
+    taken at the same ``--sf``: an sf0.001 sweep is never judged
+    against sf0.1 medians, and with no same-scale census there is no
+    adjudication."""
+    spec = importlib.util.spec_from_file_location(
+        "bench_census", os.path.join(ROOT, "tools", "bench_census.py")
+    )
+    census = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(census)
+    for n, sf in [(12, "sf0.1"), (13, "sf0.001"), (14, "sf0.1")]:
+        (tmp_path / f"bench_census_r{n}.json").write_text(
+            json.dumps({"sf_dir": sf, "queries_median": {"q": 1.0}})
+        )
+    prev = census.previous_census
+    assert prev(str(tmp_path), "sf0.1") == str(tmp_path / "bench_census_r14.json")
+    assert prev(str(tmp_path), "sf0.001") == str(tmp_path / "bench_census_r13.json")
+    assert prev(str(tmp_path), "sf0.1", before_round=14) == str(tmp_path / "bench_census_r12.json")
+    assert prev(str(tmp_path), "sf0.001", before_round=13) is None
+    assert prev(str(tmp_path), "sf1") is None

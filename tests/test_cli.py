@@ -95,6 +95,40 @@ def test_pipeline_runs_each_failing_task_once(spark, tmp_path, capsys):
     assert cli.main(worker + ["--redrive", "--follow"]) == 2
 
 
+def test_pipeline_on_paths_with_special_characters(spark, tmp_path, capsys):
+    """Paths are raw text from listing to upload: a root holding a
+    space, a `d#1/` subdirectory, `?` and `%20` in names, and a payload
+    that writes a subdirectory. Every task completes, none is
+    dead-lettered, and the nested output is mirrored."""
+    src = tmp_path / "my videos"
+    (src / "d#1").mkdir(parents=True)
+    inputs = {"top.mov": 10, "d#1/a.mov": 20, "d#1/b?.mov": 30, "d#1/c%20d.mov": 40}
+    for rel, size in inputs.items():
+        (src / rel).write_bytes(b"x" * size)
+    t = tmp_path / "tables"
+    args = [
+        "pipeline", str(src), "--filter", "ext/mov",
+        "--catalog", f"{t}/catalog", "--ledger", f"{t}/ledger",
+        "--tasks", f"{t}/tasks", "--quarantine", f"{t}/quarantine",
+        "--mirror-base", f"file://{t}/mirror", "--executor", "subprocess",
+        "--cmd", (
+            'mkdir "$OUT/sub" && for f in "$IN"/*; do '
+            'wc -c < "$f" | tr -d " " > "$OUT/sub/$(basename "$f").size"; done'
+        ),
+    ]
+    assert cli.main(args) == 0
+    capsys.readouterr()
+    assert cli.main(["status"] + _worker(t)[1:]) == 0
+    out = capsys.readouterr().out
+    # all done, and no quarantine table: nothing was dead-lettered
+    assert "pending    0" in out and "quarantine -" in out, out
+    assert spark.read.parquet(f"{t}/ledger").count() == len(inputs)
+    for rel, size in inputs.items():
+        # <mirror>/<bucket, empty for file://>/<key>/ + the payload's sub/
+        mirrored = t / "mirror" / str(src / rel).lstrip("/") / "sub" / (rel.split("/")[-1] + ".size")
+        assert mirrored.read_text().strip() == str(size), rel
+
+
 def test_worker_without_tasks_table(spark, tmp_path, capsys):
     assert cli.main(_worker(tmp_path / "tables")) == 0
     assert "completed 0 tasks; quarantined 0" in capsys.readouterr().out

@@ -89,9 +89,9 @@ def test_phony_resources_skip_transfer(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# ArrowFsLoader: the object-store transfer path (s3://, hdfs://) exercised
-# through file:// URIs — pyarrow.fs.FileSystem.from_uri dispatches all
-# schemes through the identical code path (SURVEY §2A R29-R31)
+# ArrowFsLoader: the one transfer path for file://, s3:// and hdfs://
+# (SURVEY §2A R29-R31), exercised here through file:// URLs, which
+# resolve by the listers' raw-path rule (catalog._resolve_fs)
 # ---------------------------------------------------------------------------
 
 
@@ -103,11 +103,14 @@ def test_arrowfs_loader_roundtrip(tmp_path):
     src.mkdir(parents=True)
     (src / "a.bin").write_bytes(b"A" * 100)
     (src / "b.bin").write_bytes(b"B" * 50)
+    (src / "sub").mkdir()
+    (src / "sub" / "c.bin").write_bytes(b"C" * 25)
     local = tmp_path / "local"
     local.mkdir()
     n = ld.download(f"file://{src}", str(local))
-    assert n == 150
-    assert sorted(os.listdir(local)) == ["a.bin", "b.bin"]
+    assert n == 175
+    assert sorted(os.listdir(local)) == ["a.bin", "b.bin", "sub"]
+    assert (local / "sub" / "c.bin").read_bytes() == b"C" * 25
     # single-object download
     single = tmp_path / "single"
     single.mkdir()
@@ -115,7 +118,8 @@ def test_arrowfs_loader_roundtrip(tmp_path):
 
     dest = tmp_path / "up" / "dest"
     m = ld.upload(str(local), f"file://{dest}")
-    assert m == 150
+    assert m == 175  # a local filesystem needs the nested key's parent made
+    assert (dest / "sub" / "c.bin").read_bytes() == b"C" * 25
     assert ld.exists(f"file://{dest}/a.bin")
     ld.delete(f"file://{dest}/a.bin")
     assert not ld.exists(f"file://{dest}/a.bin")
@@ -127,31 +131,30 @@ def test_tar_archive_roundtrip(tmp_path):
     """The reference DECLARES object(.tar)<->dir transfer cases but
     returns 'unimplemented' (ref internal/core/loader.go:169,258);
     here they are real: dir -> .tar object on upload, .tar object ->
-    extracted dir on download, streaming both ways, for both the
-    file:// and pyarrow-fs loaders."""
+    extracted dir on download, streaming both ways."""
     import tarfile
 
-    from chyme_spark.runner import ArrowFsLoader, FileLoader
+    from chyme_spark.runner import ArrowFsLoader
 
     work = tmp_path / "out"
     work.mkdir()
     (work / "manifest.mpd").write_bytes(b"M" * 70)
     (work / "seg1.m4s").write_bytes(b"S" * 30)
 
-    for name, ld in [("file", FileLoader()), ("arrow", ArrowFsLoader())]:
-        dest = tmp_path / name / "store" / "result.tar"
-        n_up = ld.upload(str(work), f"file://{dest}")
-        assert n_up == 100, name  # member bytes, not tar framing
-        assert tarfile.is_tarfile(dest), name
-        with tarfile.open(dest) as tf:
-            assert sorted(m.name for m in tf) == ["manifest.mpd", "seg1.m4s"]
+    ld = ArrowFsLoader()
+    dest = tmp_path / "store" / "result.tar"
+    n_up = ld.upload(str(work), f"file://{dest}")
+    assert n_up == 100  # member bytes, not tar framing
+    assert tarfile.is_tarfile(dest)
+    with tarfile.open(dest) as tf:
+        assert sorted(m.name for m in tf) == ["manifest.mpd", "seg1.m4s"]
 
-        back = tmp_path / name / "back"
-        back.mkdir(parents=True)
-        n_dn = ld.download(f"file://{dest}", str(back))
-        assert n_dn == 100, name
-        assert (back / "manifest.mpd").read_bytes() == b"M" * 70
-        assert (back / "seg1.m4s").read_bytes() == b"S" * 30
+    back = tmp_path / "back"
+    back.mkdir()
+    n_dn = ld.download(f"file://{dest}", str(back))
+    assert n_dn == 100
+    assert (back / "manifest.mpd").read_bytes() == b"M" * 70
+    assert (back / "seg1.m4s").read_bytes() == b"S" * 30
 
 
 def test_tar_extract_confines_members(tmp_path):
@@ -215,7 +218,7 @@ def test_nested_tar_flows_through_whole_task(spark, tmp_path):
     (subdirectory files actually transferred, not silently dropped)."""
     import tarfile
 
-    from chyme_spark.runner import FileLoader
+    from chyme_spark.runner import ArrowFsLoader
 
     src = tmp_path / "src"
     (src / "a").mkdir(parents=True)
@@ -250,7 +253,7 @@ def test_nested_tar_flows_through_whole_task(spark, tmp_path):
     # and the dir->dir loader paths are nested-safe too
     dl = tmp_path / "dl"
     dl.mkdir()
-    n = FileLoader().download(f"file://{out_dir}", str(dl))
+    n = ArrowFsLoader().download(f"file://{out_dir}", str(dl))
     assert n == 5 + 3
     assert (dl / "a" / "x.txt").read_bytes() == b"alpha"
 
@@ -289,7 +292,45 @@ def test_arrowfs_loader_explicit_credentials(tmp_path):
     # registry helper binds s3 while leaving file/phony factories alone
     reg = loaders_with_credentials(opts)
     assert reg["s3"]().s3_options == opts
-    assert reg["file"] is type(ld) or reg["file"].__name__ == "FileLoader"
+    assert reg["file"] is ArrowFsLoader
+
+
+def test_urls_resolve_only_through_catalog():
+    """``catalog._resolve_fs`` is the one rule that turns a URL into
+    (filesystem, path): no other chyme_spark module calls
+    ``FileSystem.from_uri`` or takes ``.path``/``.netloc`` of a
+    ``urlparse`` result, so a lister and a loader cannot drift apart on
+    how a space, `#` or `%` in a path reads."""
+    import ast
+    import pathlib
+
+    def urlparse_call(node) -> bool:
+        f = getattr(node, "func", None)
+        return isinstance(node, ast.Call) and "urlparse" in (
+            getattr(f, "id", None), getattr(f, "attr", None)
+        )
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "chyme_spark"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "catalog.py":
+            continue
+        tree = ast.parse(path.read_text())
+        parsed = {
+            t.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Assign) and urlparse_call(n.value)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Attribute):
+                continue
+            if n.attr == "from_uri" or (n.attr in ("path", "netloc") and (
+                urlparse_call(n.value) or getattr(n.value, "id", None) in parsed
+            )):
+                found.append(f"{path.relative_to(pkg)}:{n.lineno} .{n.attr}")
+    assert not found, found
 
 
 def test_s3_credentials_conf_mapping():

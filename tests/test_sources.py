@@ -92,13 +92,14 @@ def test_distributed_listing_matches_driver_listing(spark, tmp_path):
     all must list exactly the expected files for every depth bound and
     root form — plain, file:// and relative roots, a root that is a
     single file — and hide `.<name>.crc` checksum files, as Hadoop's
-    local filesystem did."""
+    local filesystem did. The tree sits under a directory whose name
+    holds a space and a `#`: a root is a raw path, never a parsed URI."""
     import os
 
     from chyme_spark.catalog import list_files
     from chyme_spark.sources import ListingStreamReader, register_listing_source
 
-    root = _deep_tree(tmp_path)
+    root = _deep_tree(tmp_path / "my tree #1")
     # relative to the working directory the session (and its Python
     # workers) started in
     rel = os.path.relpath(root)

@@ -28,6 +28,21 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def previous_census(tooldir: str, sf_dir: str, before_round: int = 0) -> str | None:
+    """Path of the latest earlier census taken at the same scale factor
+    (its ``sf_dir`` equals ``sf_dir``), or None. A census at another
+    scale is no yardstick: an sf0.001 sweep judged against sf0.1
+    medians flags nothing and clears nothing."""
+    for n in range(200, 11, -1):
+        cand = os.path.join(tooldir, f"bench_census_r{n}.json")
+        if not os.path.exists(cand) or (before_round and n >= before_round):
+            continue
+        with open(cand) as fh:
+            if json.load(fh).get("sf_dir") == sf_dir:
+                return cand
+    return None
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
@@ -83,12 +98,7 @@ def main() -> int:
     # median lands in queries_median; the adjudication block records
     # both numbers so the artifact shows its work.
     adjudication: dict[str, dict[str, float]] = {}
-    prev_path = None
-    for n in range(200, 11, -1):
-        cand = os.path.join(tooldir, f"bench_census_r{n}.json")
-        if os.path.exists(cand) and (not args.round or n < args.round):
-            prev_path = cand
-            break
+    prev_path = previous_census(tooldir, args.sf, args.round)
     if prev_path:
         prev = json.load(open(prev_path))["queries_median"]
         movers = sorted(
