@@ -10,11 +10,33 @@ float.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # scale 4 holds every synthetic money/qty column exactly (2-decimal data)
 DEC = "decimal(18,4)"
+
+# input bytes per shuffle partition when a partition count is derived
+# from input size (well under the 100 MB-1 GB post-shuffle advisory)
+PARTITION_BYTES = 64 << 20
+
+
+def table_bytes(sf: str, *names: str) -> int | None:
+    """On-disk bytes of the named tables under ``sf`` (a partitioned
+    table's part files summed), or None when one cannot be read."""
+    total = 0
+    for name in names:
+        src = f"{sf}/{name}.parquet"
+        try:
+            if os.path.isdir(src):
+                total += sum(e.stat().st_size for e in os.scandir(src) if e.is_file())
+            else:
+                total += os.path.getsize(src)
+        except OSError:
+            return None
+    return total
 
 
 def dec(col: str | Column) -> Column:

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from chyme_spark.ops.common import dec, money, ts_str
+from chyme_spark.ops.common import PARTITION_BYTES, dec, money, table_bytes, ts_str
 from chyme_spark.registry import query
 from chyme_spark.session import load_table
 
@@ -312,18 +312,10 @@ def _state_partitions(sf: str) -> int:
             pass
     from chyme_spark.session import default_parallelism
 
-    src = f"{sf}/events.parquet"
-    try:
-        if os.path.isdir(src):  # scaled/partitioned table: sum the parts
-            nbytes = sum(
-                e.stat().st_size for e in os.scandir(src) if e.is_file()
-            )
-        else:
-            nbytes = os.path.getsize(src)
-    except OSError:
+    nbytes = table_bytes(sf, "events")
+    if nbytes is None:
         return default_parallelism()
-    per_part = 64 << 20
-    return max(4, min(default_parallelism(), -(-nbytes // per_part)))
+    return max(4, min(default_parallelism(), -(-nbytes // PARTITION_BYTES)))
 
 
 @contextlib.contextmanager

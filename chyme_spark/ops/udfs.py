@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from chyme_spark.ops.common import PARTITION_BYTES, table_bytes
 from chyme_spark.ops.relational import _URL_SQL, synthetic_urls
 from chyme_spark.registry import query
 
@@ -280,13 +281,13 @@ def _reconcile_bucket(orders_pdf: pd.DataFrame, lines_pdf: pd.DataFrame) -> pd.D
     """,
     doc="cogrouped applyInPandas: full-corpus per-order header-vs-lines reconciliation in integer cents, bucketed so Python dispatch count is bounded — the two-sided grouped Python surface, LEFT-JOIN oracle",
 )
-def x_cogroup_reconcile(spark: SparkSession, sf: str, n_buckets: int = 1024) -> DataFrame:
+def x_cogroup_reconcile(spark: SparkSession, sf: str) -> DataFrame:
     """100 TB shape: cogroup shuffles BOTH tables once on a shared
     BUCKET key (pmod(xxhash64(orderkey), n_buckets) — a HASH, not the
     raw modulus: TPC-H dbgen orderkeys are sparse, 8 keys per 32-key
-    block, so `% 1024` would populate only ~256 buckets and quadruple
-    each live bucket's width; hashing spreads any key pattern evenly,
-    r12 advice) and streams each (orders-bucket,
+    block, so a raw modulus would populate only a quarter of the
+    buckets and quadruple each live bucket's width; hashing spreads any
+    key pattern evenly, r12 advice) and streams each (orders-bucket,
     lines-bucket) pair through Arrow — the same exchange a shuffle join
     pays — with the per-order reconciliation VECTORIZED inside the
     bucket (numpy floor + one pandas groupby; see _reconcile_bucket).
@@ -296,21 +297,26 @@ def x_cogroup_reconcile(spark: SparkSession, sf: str, n_buckets: int = 1024) -> 
 
     Why bucketed (r12): cogrouping on the raw order key pays one
     Python dispatch PER ORDER — the sf0.1 census measured 36.6 s for
-    15k group calls on a 10%-sampled corpus, pure dispatch overhead
-    (the r7 form bounded itself to that sample for exactly this
-    reason). Bucketing bounds the dispatch count at n_buckets no
-    matter the corpus size, which both makes the FULL corpus
-    affordable (the 10% sample is gone — every order is reconciled;
-    measured 1.6 s warm at sf0.1 where the sampled per-key form took
-    36.6 s — ~23x faster on 10x the rows)
-    and is how the cogrouped-map surface must be deployed at 100 TB:
-    dispatch count tracks the task graph, bucket width tracks
-    |corpus|/n_buckets, and n_buckets scales with the cluster, not
-    the data. Orders and lines agree on the bucket by construction
-    (same hash of the same key), so per-order pairing inside a bucket
-    is exact."""
+    15k group calls on a 10%-sampled corpus, pure dispatch overhead.
+    Bucketing bounds the dispatch count at n_buckets no matter the
+    corpus size, so the FULL corpus is affordable.
+
+    How many buckets: one per 64 MiB of ``orders`` + ``lineitem``
+    bytes, floored at the session's shuffle partitions — the byte rule
+    ops/streaming._state_partitions uses for state stores. Each bucket
+    is one Python call with a fixed cost, so a count that ignores the
+    data is wrong at both ends: a fixed 1,024 near-empty buckets cost
+    8.3-11.2 CPU s per warm run at sf0.1 where 4 buckets cost 2.9-5.7
+    (4-core host), and at 100 TB the count grows with the corpus so a
+    bucket's pandas frame stays memory-light, while the floor keeps
+    every shuffle partition busy. Orders and lines agree on the bucket by
+    construction (same hash of the same key), so per-order pairing
+    inside a bucket is exact and the result does not depend on the
+    count."""
     from chyme_spark.session import load_table
 
+    nbytes = table_bytes(sf, "orders", "lineitem") or 0
+    n_buckets = max(int(spark.conf.get("spark.sql.shuffle.partitions")), -(-nbytes // PARTITION_BYTES))
     orders = (
         load_table(spark, sf, "orders")
         .select("o_orderkey", "o_totalprice")

@@ -119,6 +119,12 @@ _FRONT_50 = [
     # x_url_canonicalize, x_variant_json — all r10, return next round):
     "d16_approx_count_distinct", "d43_minhash_lsh",
     "x_ann_ivf_topk", "x_ann_lsh_topk", "x_simhash_neardup",
+    # (b) changed since the round-16 window: the cogroup's bucket count
+    # derives from input bytes, floored at the shuffle partitions (was
+    # a fixed 1,024 — per-bucket Python dispatch was the query's cost);
+    # hash-identical at sf0.001/sf0.01. Displaces d12_star_join
+    # (unchanged r16 green, returns next round):
+    "x_cogroup_reconcile",
     # (b) changed in round 15 — _min_label_cc gained a failure-path
     # guard + comment; per the shared-helper convention its callers
     # are ledger-sentineled by hand and the driver re-proves them
@@ -200,7 +206,6 @@ _FRONT_50 = [
     "x_text_normalize", "x_transpose_stats",
     "d03_filter", "d04_regex_ext_filter", "d05_distinct",
     "d06_keyed_dedup", "d07_inner_join",
-    "d12_star_join",
     "d40_stream_watermark", "d41_stream_dedup",
 ]
 

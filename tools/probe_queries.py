@@ -7,12 +7,16 @@ evaluation of every output column, query construction included), one
 warm pass (JIT + parquet footers), then N timed passes per query with
 the per-query MEDIAN reported — the number a round's OPTIMIZATION_r*.md
 quotes as a before/after. A query that fails is reported under
-``errors`` and the rest are still timed. Run on an idle host: the
+``errors`` and the rest are still timed. ``codegen_compiles`` counts
+the Janino compiles in every run after a query's warm one: a warm
+query reuses its generated classes, so a nonzero count means Spark's
+generated-code cache is thrashing. Run on an idle host: the
 r14/r15 census-mover adjudications all traced inflated readings to
 concurrent Spark JVMs.
 
 Prints one JSON line:
-    {"sf": ..., "passes": N, "queries": {name: median_sec}[, "errors": ..., "revived": true]}
+    {"sf": ..., "passes": N, "queries": {name: median_sec}, "codegen_compiles": N
+     [, "errors": ..., "revived": true]}
 """
 
 from __future__ import annotations
@@ -33,18 +37,30 @@ def main() -> int:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    from bench import Runner
+    from bench import Runner, probe_block
     from chyme_spark.registry import load_all
-    from chyme_spark.session import get_spark
+    from chyme_spark.session import codegen_compiles, get_spark
 
     registry = load_all()
     unknown = [n for n in args.names if n not in registry]
     if unknown:
         ap.error(f"not registered: {unknown}")
     runner = Runner(registry, functools.partial(get_spark, "probe_queries"))
-    blk = runner.block(args.names, args.sf, passes=args.passes)
+    compiles = 0
+    warmed: set[str] = set()
+
+    def time_one(name: str) -> float:
+        nonlocal compiles
+        before = codegen_compiles(runner.spark)
+        secs = runner.time(name, args.sf)
+        if name in warmed:
+            compiles += codegen_compiles(runner.spark) - before
+        warmed.add(name)
+        return secs
+
+    blk = probe_block(args.names, time_one, runner.revive_if_dead, args.passes)
     blk["queries"] = blk.pop("queries_median")
-    print(json.dumps({"sf": args.sf, "passes": args.passes, **blk}))
+    print(json.dumps({"sf": args.sf, "passes": args.passes, **blk, "codegen_compiles": compiles}))
     return 0
 
 
