@@ -287,11 +287,8 @@ def cmd_tasker(args) -> int:
         # of rows in the tasks table, so a task already completed, pending
         # or quarantined is there, and re-running tasker before the worker
         # drains appends no duplicate (ADVICE r1).
-        tasks = create_tasks(catalog, None, templates)
         existing = tables.read(spark, "tasks", args.tasks)
-        if existing is not None:
-            tasks = tasks.join(existing.select("task_hash"), "task_hash", "left_anti")
-        n = _append_counted(tasks, args.tasks)
+        n = _append_counted(create_tasks(catalog, existing, templates), args.tasks)
     print(f"created {n} tasks -> {args.tasks}")
     return 0
 

@@ -169,7 +169,6 @@ def x_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
 
 _MINHASH_K = 16
 _BANDS = 4
-_ROWS_PER_BAND = _MINHASH_K // _BANDS
 _JACCARD_TAU = 0.8
 
 
@@ -3761,7 +3760,7 @@ def doc_segments(docs: DataFrame, seg_words: int = 8) -> DataFrame:
     (keep-first dedup) and x_boilerplate_scrub (document-frequency
     scrub)."""
     docs = docs.withColumn("__ws", F.split("text", " "))
-    ws = F.col("__ws")  # materialized once; see x_lm_surprisal_score note
+    ws = F.col("__ws")  # materialized once; see _surprisal_score note
     nseg = F.ceil(F.size(ws) / F.lit(float(seg_words))).cast("int")
     return docs.select(
         "doc_id",
@@ -3883,47 +3882,14 @@ def mixture_weights(docs: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "x_lm_surprisal_score",
-    # CCNet-style language-model quality signal (Wenzek et al. 2020 score
-    # docs by LM perplexity; here the LM is a bigram model trained on the
-    # corpus itself) made EXACTLY cross-engine: per-bigram surprisal is
-    # quantized to whole bits as floor(log2(T/c)) computed with pure
-    # integer ops — length(bin(T div c)) - 1 — so no libm log is ever
-    # evaluated (floor(log2(floor(x))) == floor(log2(x)) for x >= 1,
-    # hence the integer division loses nothing). The only division is
-    # exact-int -> double (IEEE-deterministic) feeding ROUND.
-    oracle="""
-    WITH docs AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-    bg AS (SELECT doc_id, ws[CAST(t.i AS INT)] || ' ' || ws[CAST(t.i+1 AS INT)] AS b
-           FROM docs, LATERAL unnest(range(1, len(ws))) AS t(i)),
-    cnt AS (SELECT b, CAST(count(*) AS BIGINT) AS c FROM bg GROUP BY b),
-    tot AS (SELECT CAST(count(*) AS BIGINT) AS T FROM bg)
-    SELECT bg.doc_id,
-           CAST(count(*) AS BIGINT) AS n_bigrams,
-           CAST(SUM(length(bin(T // c)) - 1) AS BIGINT) AS sum_bits,
-           CAST(ROUND(SUM(length(bin(T // c)) - 1) * 1.0 / count(*), 4) AS DOUBLE)
-               AS avg_surprisal
-    FROM bg JOIN cnt USING (b), tot
-    GROUP BY bg.doc_id
-    """,
-    doc="bigram-LM surprisal quality score (CCNet-style): per-doc mean of floor(log2(T/count)) bits, exact integer log2 via bin-length — high = improbable text",
-)
-def x_lm_surprisal_score(spark: SparkSession, sf: str) -> DataFrame:
-    """The perplexity-filter signal a CCNet-style pipeline ranks docs by
-    (keep head/middle of the distribution, drop the gibberish tail),
-    with the LM trained on the corpus being scored — one extra pass, no
-    external model artifact.
-
-    Scale shape (100 TB): ONE bigram fan-out (narrow map), then exactly
-    two shuffles — the b-keyed exchange whose window computes each
-    bigram's corpus frequency in place, and the groupBy(doc_id) for the
-    score — plus a 1-row total broadcast whose branch never explodes
-    (T comes from per-doc word counts). Quantizing surprisal to whole
-    bits is what buys exactness; the un-quantized double-log variant is
-    the same plan with F.log2 and a rows-only check.
-    """
-    docs = load_table(spark, sf, "documents")
+def _surprisal_score(docs: DataFrame) -> DataFrame:
+    """Per-doc bigram surprisal of ``documents`` under the bigram LM
+    trained on the same docs: (doc_id, n_bigrams, sum_bits), where each
+    bigram b scores floor(log2(T / c_b)) whole bits — T the corpus
+    bigram total, c_b its count — computed with integer ops only,
+    length(bin(T div c_b)) - 1. Docs with fewer than two tokens have no
+    bigrams and no row. The one scorer behind x_lm_surprisal_score and
+    x_ccnet_buckets."""
     # materialize the split ONCE: referencing F.split(...) inside the
     # transform lambda re-evaluates the split per element (O(words^2)
     # string work per doc — measured 7x slower at sf0.1)
@@ -3967,10 +3933,54 @@ def x_lm_surprisal_score(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_bigrams"),
             F.sum(bits).cast("long").alias("sum_bits"),
-            F.round(F.sum(bits) * 1.0 / F.count("*"), 4)
-            .cast("double")
-            .alias("avg_surprisal"),
         )
+    )
+
+
+@query(
+    "x_lm_surprisal_score",
+    # CCNet-style language-model quality signal (Wenzek et al. 2020 score
+    # docs by LM perplexity; here the LM is a bigram model trained on the
+    # corpus itself) made EXACTLY cross-engine: per-bigram surprisal is
+    # quantized to whole bits as floor(log2(T/c)) computed with pure
+    # integer ops — length(bin(T div c)) - 1 — so no libm log is ever
+    # evaluated (floor(log2(floor(x))) == floor(log2(x)) for x >= 1,
+    # hence the integer division loses nothing). The only division is
+    # exact-int -> double (IEEE-deterministic) feeding ROUND.
+    oracle="""
+    WITH docs AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
+    bg AS (SELECT doc_id, ws[CAST(t.i AS INT)] || ' ' || ws[CAST(t.i+1 AS INT)] AS b
+           FROM docs, LATERAL unnest(range(1, len(ws))) AS t(i)),
+    cnt AS (SELECT b, CAST(count(*) AS BIGINT) AS c FROM bg GROUP BY b),
+    tot AS (SELECT CAST(count(*) AS BIGINT) AS T FROM bg)
+    SELECT bg.doc_id,
+           CAST(count(*) AS BIGINT) AS n_bigrams,
+           CAST(SUM(length(bin(T // c)) - 1) AS BIGINT) AS sum_bits,
+           CAST(ROUND(SUM(length(bin(T // c)) - 1) * 1.0 / count(*), 4) AS DOUBLE)
+               AS avg_surprisal
+    FROM bg JOIN cnt USING (b), tot
+    GROUP BY bg.doc_id
+    """,
+    doc="bigram-LM surprisal quality score (CCNet-style): per-doc mean of floor(log2(T/count)) bits, exact integer log2 via bin-length — high = improbable text",
+)
+def x_lm_surprisal_score(spark: SparkSession, sf: str) -> DataFrame:
+    """The perplexity-filter signal a CCNet-style pipeline ranks docs by
+    (keep head/middle of the distribution, drop the gibberish tail),
+    with the LM trained on the corpus being scored — one extra pass, no
+    external model artifact.
+
+    Scale shape (100 TB): ONE bigram fan-out (narrow map), then exactly
+    two shuffles — the b-keyed exchange whose window computes each
+    bigram's corpus frequency in place, and the groupBy(doc_id) for the
+    score — plus a 1-row total broadcast whose branch never explodes
+    (T comes from per-doc word counts). Quantizing surprisal to whole
+    bits is what buys exactness; the un-quantized double-log variant is
+    the same plan with F.log2 and a rows-only check.
+    """
+    score = _surprisal_score(load_table(spark, sf, "documents"))
+    return score.withColumn(
+        "avg_surprisal",
+        F.round(F.col("sum_bits") * 1.0 / F.col("n_bigrams"), 4).cast("double"),
     )
 
 
@@ -5963,47 +5973,15 @@ def x_dataset_card(spark: SparkSession, sf: str) -> DataFrame:
 )
 def x_ccnet_buckets(spark: SparkSession, sf: str) -> DataFrame:
     """100 TB plan: the surprisal score costs its two corpus shuffles
-    (the b-keyed window + doc rollup, see x_lm_surprisal_score — one
-    bigram explode since r15, was three); the tercile
+    (the b-keyed window + doc rollup of the shared _surprisal_score —
+    one bigram explode since r15, was three); the tercile
     is then one lang-keyed window over the per-doc score table — a
     KEYED partition (|langs| tasks over doc-count rows), never a
     global window; the surprisal mean is integer 1e4-scaled floor
     division so the ranking key is exact on both engines. Docs with
     fewer than two tokens have no bigrams and are excluded on both
     sides by construction."""
-    docs = load_table(spark, sf, "documents").withColumn("__ws", F.split("text", " "))
-    ws = F.col("__ws")
-    n = F.size(ws)
-    grams = F.when(n >= 2, F.sequence(F.lit(1), n - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    bg = docs.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                grams,
-                lambda i: F.concat_ws(" ", F.element_at(ws, i), F.element_at(ws, i + 1)),
-            )
-        ).alias("b"),
-    )
-    # r15 (guide §2.4, same restructure as x_lm_surprisal_score): the
-    # count-then-join-back shape ran the bigram explode three times;
-    # count-over-window BY b runs it once, and the total T comes from
-    # per-doc word counts without the explode. Hash-identical.
-    c = F.count("*").over(Window.partitionBy("b"))
-    tot = docs.agg(
-        F.sum(F.when(n >= 2, n - 1).otherwise(0)).cast("long").alias("T")
-    )
-    bits = F.length(F.bin(F.expr("T div c"))) - 1
-    score = (
-        bg.withColumn("c", c)
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.sum(bits).cast("long").alias("sum_bits"),
-            F.count("*").cast("long").alias("n_bigrams"),
-        )
-    )
+    score = _surprisal_score(load_table(spark, sf, "documents"))
     lang = load_table(spark, sf, "documents").select("doc_id", "lang")
     ranked = score.join(lang, "doc_id").withColumn(
         "surprisal_e4", F.expr("(sum_bits * 10000L) div n_bigrams").cast("long")

@@ -91,7 +91,6 @@ def d03_filter(spark: SparkSession, sf: str) -> DataFrame:
 # Synthetic resource-catalog URL: documents.source is 'srcN'; we derive a
 # deterministic file extension from doc_id so the chyme extension filter
 # (ref internal/ingest/util.go:29 regex '^(.+)\.%s$') has realistic prey.
-_EXTS = ["mov", "mp4", "txt", "json", "MOV", "parquet"]
 _URL_SQL = (
     "concat('s3://data-lake/', source, '/obj_', CAST(doc_id AS VARCHAR), '.', "
     "CASE CAST(doc_id % 6 AS INT) WHEN 0 THEN 'mov' WHEN 1 THEN 'mp4' WHEN 2 THEN 'txt' "

@@ -297,19 +297,11 @@ def _state_partitions(sf: str) -> int:
     parallel at fixture scale — the A/B's fastest measured point) and
     capped at the session's shuffle parallelism (on a real cluster
     SPARK_GRAFT_CPUS / conf carries 2-3x total executor cores, so a
-    100 TB stream saturates the cluster exactly as before).
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides for deployments that
-    size state stores explicitly. Results are partition-count-invariant
-    (keyed state, watermark eviction, and join semantics do not depend
-    on the shuffle layout); the oracles and the stream==batch pytest
-    contracts pin that.
+    100 TB stream saturates the cluster exactly as before). Results are
+    partition-count-invariant (keyed state, watermark eviction, and join
+    semantics do not depend on the shuffle layout); the oracles and the
+    stream==batch pytest contracts pin that.
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        try:
-            return max(1, int(env))
-        except ValueError:
-            pass
     from chyme_spark.session import default_parallelism
 
     nbytes = table_bytes(sf, "events")

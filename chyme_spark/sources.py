@@ -24,8 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-FORMATS = ("parquet", "orc", "json", "csv", "binaryFile")
-
 CORRUPT_COL = "_corrupt_record"
 
 

@@ -12,8 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from chyme_spark.tasker import LEDGER_SCHEMA
-
 
 def _strings(*names: str) -> list[T.StructField]:
     return [T.StructField(n, T.StringType()) for n in names]
@@ -34,7 +32,13 @@ SCHEMAS: dict[str, T.StructType] = {
             T.StructField("phony", T.BooleanType()),
         ]
     ),
-    "ledger": LEDGER_SCHEMA,
+    "ledger": T.StructType(
+        [
+            T.StructField("task_hash", T.StringType(), False),
+            T.StructField("stage", T.StringType(), False),
+            T.StructField("completed_at", T.TimestampType(), True),
+        ]
+    ),
     "quarantine": T.StructType(
         _strings("task_hash", "error")
         + [T.StructField("failed_at", T.TimestampType())]

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from chyme_spark.catalog import ingest, split_malformed, with_resource_columns
 from chyme_spark.filters import compile_filter
-from chyme_spark.tasker import create_tasks, empty_ledger
+from chyme_spark.tasker import create_tasks
 from chyme_spark.templates import expand
 
 
@@ -93,7 +93,7 @@ def test_task_hash_order_insensitive(spark):
 
 def test_ledger_antijoin_idempotence(spark):
     cat = with_resource_columns(urls_df(spark, ["s3://b/a.mov", "s3://b/b.mp4"]))
-    first = create_tasks(cat, empty_ledger(spark))
+    first = create_tasks(cat)
     assert first.count() == 2
     # replay with the ledger recording everything processed -> 0 new tasks
     ledger = first.select(

@@ -355,6 +355,18 @@ def test_no_single_partition_global_scalars(audits):
         )
 
 
+def test_flagship_plans_no_local_rdd(spark, sf_dir):
+    """d50 runs the tasker verb's own rule with no tasks recorded, so its
+    optimized plan reads only the scan. An empty Python-built ledger
+    would be a LogicalRDD the optimizer cannot prove empty: every run
+    would pay for its stages until AQE dropped the anti-join."""
+    from chyme_spark.registry import load_all
+
+    df = load_all()["d50_pipeline_flagship"].fn(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan, plan
+
+
 def test_q18_keeps_forced_smj(audits):
     # the fact-fact merge path is the bench's spill-measuring headline;
     # losing the hint silently turns it into a broadcast at small SF

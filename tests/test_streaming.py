@@ -431,30 +431,20 @@ def test_tws_sessions_match_apply_in_pandas_twin(spark, sf_dir):
 
 def test_state_partitions_scale_adaptive(monkeypatch, sf_dir):
     """The streaming state-partition count derives from input bytes:
-    floored at 4 at fixture scale, capped at the session parallelism,
-    env-overridable (spark_optimization_guide §2 — scale-adaptive, not
-    a constant tuned for local mode or the cluster)."""
+    floored at 4 at fixture scale, capped at the session parallelism
+    (spark_optimization_guide §2 — scale-adaptive, not a constant tuned
+    for local mode or the cluster)."""
     from chyme_spark.ops import streaming as st
     from chyme_spark.session import default_parallelism
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     n = st._state_partitions(sf_dir)
     assert 4 <= n <= max(4, default_parallelism())
     # a 2 MB fixture must not pay one state store per host core
     assert n == 4
 
     # big input saturates the session parallelism (cap, not unbounded)
-    import os
-
-    real_getsize = os.path.getsize
-    monkeypatch.setattr(
-        st.os.path, "getsize", lambda p: 10 * (1 << 40)
-    )  # 10 TiB
+    monkeypatch.setattr(st.os.path, "getsize", lambda p: 10 * (1 << 40))  # 10 TiB
     assert st._state_partitions(sf_dir) == default_parallelism()
-    monkeypatch.setattr(st.os.path, "getsize", real_getsize)
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "7")
-    assert st._state_partitions(sf_dir) == 7
 
 
 def test_scaled_state_conf_restores_session_parallelism(spark, sf_dir):

@@ -7,9 +7,6 @@ readback, so its explain() cannot show the state layout; this rebuilds
 the same streaming DataFrame and explains it before start. Usage:
 
     python tools/capture_stream_plan.py [--sf /root/testdata/sf0.1] [--out FILE]
-
-Set SPARK_GRAFT_STREAM_PARTITIONS to pin the old constant (e.g. 32) for
-a "before" capture.
 """
 
 from __future__ import annotations
@@ -46,9 +43,8 @@ def main() -> int:
         agg.explain("formatted")
     text = (
         f"# d40_stream_watermark streaming aggregation, pre-start plan\n"
-        f"# sf={args.sf}  SPARK_GRAFT_STREAM_PARTITIONS="
-        f"{os.environ.get('SPARK_GRAFT_STREAM_PARTITIONS', '(unset: adaptive)')}"
-        f"  -> _state_partitions={st._state_partitions(args.sf)}\n\n" + buf.getvalue()
+        f"# sf={args.sf}  -> _state_partitions={st._state_partitions(args.sf)}\n\n"
+        + buf.getvalue()
     )
     if args.out:
         with open(args.out, "w") as f:
