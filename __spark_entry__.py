@@ -22,7 +22,7 @@ _HERE = os.path.dirname(os.path.abspath(__file__))
 if _HERE not in sys.path:
     sys.path.insert(0, _HERE)
 
-from chyme_spark.registry import load_all  # noqa: E402
+from chyme_spark.registry import driver_order, load_all  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -57,7 +57,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, in the
+    driver order of :func:`chyme_spark.registry.window_order` (the
+    first 50 are the correctness window)."""
     registry = load_all()
 
     def wrap(fn):
@@ -66,10 +68,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    return {name: wrap(q.fn) for name, q in registry.items()}
+    return {name: wrap(registry[name].fn) for name in driver_order()[0]}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle for each SQL-expressible query (others rows-only)."""
+    """DuckDB oracle for each SQL-expressible query (others rows-only),
+    in the same driver order as :func:`queries`."""
     registry = load_all()
-    return {name: q.oracle for name, q in registry.items() if q.oracle is not None}
+    return {n: registry[n].oracle for n in driver_order()[0] if registry[n].oracle is not None}

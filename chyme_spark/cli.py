@@ -1,7 +1,8 @@
 """CLI — the chyme verbs as Spark jobs (ref ``README.md:98-128`` usage).
 
     chyme-spark ingest <root-or-url> --filter ext/mov [--recursion N] --catalog DIR
-    chyme-spark tasker --catalog DIR --ledger DIR --tasks DIR
+        [--follow | --distributed-listing] [--s3-option KEY=VALUE ...]
+    chyme-spark tasker --catalog DIR --tasks DIR
     chyme-spark worker --tasks DIR --ledger DIR --quarantine DIR [--follow | --redrive]
     chyme-spark status [--catalog DIR] [--tasks DIR] [--ledger DIR] [--quarantine DIR]
     chyme-spark query <name> [--sf DIR] [--show N]
@@ -71,7 +72,22 @@ def _run_stream(writer, args) -> str:
     return f"long-poll every {interval}" if interval else "stream drain"
 
 
-def _ingest_follow(spark, args) -> int:
+def _listing(spark, root: str, recursion: int | None, s3_options: dict | None, stream: bool = False):
+    """The chyme_listing reader over ``root``: the one place its path,
+    depth and ``s3.*`` object-store options (endpoint, credentials) are
+    set, for the batch and the streaming (``stream``) ingest alike."""
+    from chyme_spark.sources import register_listing_source
+
+    register_listing_source(spark)
+    rd = (spark.readStream if stream else spark.read).format("chyme_listing").option("path", root)
+    if recursion is not None:
+        rd = rd.option("depth", str(recursion))
+    for k, v in (s3_options or {}).items():
+        rd = rd.option(f"s3.{k}", v)
+    return rd
+
+
+def _ingest_follow(spark, args, s3_options: dict) -> int:
     """Perpetual ingest: the recursive lister as a STREAMING source
     feeding the catalog — the reference's always-on indexer service
     (ref internal/ingest/service.go:42-119 behind its HTTP loop) as a
@@ -83,23 +99,10 @@ def _ingest_follow(spark, args) -> int:
     ListObjectsV2 page per poll instead of a full re-list (see
     sources.ListingStreamReader)."""
     from chyme_spark.filters import compile_filter
-    from chyme_spark.sources import register_listing_source
 
-    register_listing_source(spark)
-    rd = spark.readStream.format("chyme_listing").option("path", args.root)
-    if args.recursion is not None:
-        rd = rd.option("depth", str(args.recursion))
+    rd = _listing(spark, args.root, args.recursion, s3_options, stream=True)
     if getattr(args, "append_only_keys", False):
         rd = rd.option("appendOnlyKeys", "true")
-    # explicit object-store config (endpoint/credentials) for the
-    # streaming lister — production normally rides the env credential
-    # chain, but private endpoints (minio, localstack) need overrides
-    for kv in getattr(args, "s3_option", None) or []:
-        k, _, v = kv.partition("=")
-        if not v:
-            print(f"error: --s3-option expects KEY=VALUE, got {kv!r}", file=sys.stderr)
-            return 2
-        rd = rd.option(f"s3.{k}", v)
     wanted = compile_filter(args.filter)
     counts = {"n": 0}
 
@@ -124,6 +127,7 @@ def _ingest_once(
     recursion: int | None,
     catalog_path: str,
     distributed_listing: bool = False,
+    s3_options: dict | None = None,
 ) -> tuple[int, int]:
     """One batch ingest pass (list -> filter -> dedup -> append); returns
     (n ingested, n quarantined). Shared by the CLI verb and the HTTP
@@ -140,13 +144,7 @@ def _ingest_once(
     if distributed_listing:
         # the same walk as list_files, run on executors by the
         # chyme_listing source
-        from chyme_spark.sources import register_listing_source
-
-        register_listing_source(spark)
-        rd = spark.read.format("chyme_listing").option("path", root)
-        if recursion is not None:
-            rd = rd.option("depth", str(recursion))
-        urls = rd.load().select("url")
+        urls = _listing(spark, root, recursion, s3_options).load().select("url")
     elif "://" in root and not root.startswith("file://"):
         # remote URL without a listing mode = the reference's
         # single-object ingest path
@@ -191,7 +189,7 @@ def cmd_ingest(args) -> int:
         # the running service instead of touching storage itself
         # (cmd/ingest.go:66-92)
         local_only = [
-            f for f in ("follow", "distributed_listing", "catalog")
+            f for f in ("follow", "distributed_listing", "catalog", "s3_option")
             if getattr(args, f, None)
         ]
         if local_only:
@@ -215,6 +213,25 @@ def cmd_ingest(args) -> int:
     if not getattr(args, "catalog", None):
         print("error: --catalog is required unless --server is given", file=sys.stderr)
         return 2
+    # explicit object-store config (endpoint/credentials) for the
+    # chyme_listing source — production normally rides the env
+    # credential chain, but private endpoints (minio, localstack) need
+    # overrides; only that source reads them
+    s3_options = {}
+    for kv in getattr(args, "s3_option", None) or []:
+        k, _, v = kv.partition("=")
+        if not v:
+            print(f"error: --s3-option expects KEY=VALUE, got {kv!r}", file=sys.stderr)
+            return 2
+        s3_options[k] = v
+    listing = getattr(args, "follow", False) or getattr(args, "distributed_listing", False)
+    if s3_options and not listing:
+        print(
+            "error: --s3-option needs --follow or --distributed-listing — the "
+            "driver listing and a single-object URL read no object-store option",
+            file=sys.stderr,
+        )
+        return 2
     spark = get_spark("chyme_ingest")
     if getattr(args, "follow", False):
         from chyme_spark.filters import compile_filter
@@ -224,7 +241,7 @@ def cmd_ingest(args) -> int:
         except ValueError as e:
             print(f"error: {e}", file=sys.stderr)
             return 2
-        return _ingest_follow(spark, args)
+        return _ingest_follow(spark, args, s3_options)
     try:
         n, nq = _ingest_once(
             spark,
@@ -233,6 +250,7 @@ def cmd_ingest(args) -> int:
             args.recursion,
             args.catalog,
             getattr(args, "distributed_listing", False),
+            s3_options,
         )
     except ValueError as e:
         print(f"error: {e}", file=sys.stderr)
@@ -627,8 +645,9 @@ def main(argv: list[str] | None = None) -> int:
                    help="s3 roots with lexically increasing keys: high-water-key "
                    "incremental listing (one empty page per unchanged poll)")
     p.add_argument("--s3-option", action="append", metavar="KEY=VALUE",
-                   help="object-store option for --follow (endpoint_override, "
-                   "access_key, ...); repeatable. Default: env credential chain")
+                   help="object-store option for --follow or --distributed-listing "
+                   "(endpoint_override, access_key, ...); repeatable. Default: env "
+                   "credential chain")
     p.add_argument("--server", default=None, metavar="URL",
                    help="client mode: POST the request to a running "
                         "`chyme-spark serve` instead of ingesting locally "
@@ -649,7 +668,6 @@ def main(argv: list[str] | None = None) -> int:
 
     p = sub.add_parser("tasker", help="expand catalog through templates into tasks")
     p.add_argument("--catalog", required=True)
-    p.add_argument("--ledger", required=True)
     p.add_argument("--tasks", required=True)
     p.add_argument("--mirror-base", default=None, help="override template output base, e.g. file:///data/mirror")
     p.add_argument("--executor", default=None, help="override executor: noop|subprocess|docker")

@@ -11,10 +11,24 @@ Determinism contract baked into every registered query (SURVEY §2B):
     DECIMAL where order-of-addition could flip a rounding boundary;
   * cast timestamps to DATE or STRING in outputs;
   * include a unique key in every ORDER BY that feeds a LIMIT / rank.
+
+The driver checks the FIRST 50 queries it is handed, so
+``__spark_entry__`` hands them over in :func:`window_order`:
+  1. forced, by name: every query with no row in
+     ``tools/oracle_ledger.json``, with a ledger hash that differs from
+     :func:`source_hash` (a ``--mark-changed`` sentinel never matches),
+     or with no green row in the ``CORRECTNESS_r*.json`` history
+     (:func:`last_green_rounds`);
+  2. backfill, up to 50: the other oracle-checked queries, oldest ledger
+     round first, then by name. Rows-only queries never backfill: their
+     driver row proves only rows > 0, and pytest pins their contracts;
+  3. the rest by name (d-ids, then x-ops).
 """
 
 from __future__ import annotations
 
+import json
+import os
 import re
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -47,134 +61,13 @@ def query(name: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
-# Round-1/2 lesson (VERDICT.md): the driver checks exactly the FIRST 50
-# registry entries per round, in insertion order.  Each round the window
-# MUST rotate: lead with every query lacking a green driver CORRECTNESS
-# row (new this round or red last round), then backfill with the greens
-# whose last driver check is oldest, so staleness is bounded.
-#
-# Window policy: (a) new this-round ops go first as they are added;
-# (b) then every query whose oracle or implementation CHANGED since its
-# last driver-green round, so the driver re-proves the new arithmetic —
-# "changed" is mechanical: tools/oracle_ledger.json records a source
-# hash per query at its last driver-green, and tests/test_registry.py
-# fails if a changed/unledgered query sits outside the first 50;
-# (c) then backfill oldest-first — hash-proven greens whose last driver
-# check is stalest. Rows-only-by-design ops (x_ann_*,
-# x_simhash_neardup, d16/d40/d41/d43) are excluded from backfill:
-# their driver row is only rows>0, the weakest re-proof, and their
-# contracts are pinned by recall/stream==batch pytest suites.
-# If the list exceeds 50, the tail (youngest backfill) rotates out and
-# returns next round.
-_FRONT_50 = [
-    # (a) new in round 15, never driver-checked: cluster-label
-    # RETRACTION — localized re-CC over tombstone-touched components,
-    # the split maintenance the merge-only quotient update cannot
-    # express:
-    "x_cluster_label_retract",
-    # the text-index lifecycle pair (gate + compactor, the family
-    # symmetry x_inverted_index lacked — every other index family
-    # already had incremental maintenance: dedup/neardup/ANN):
-    "x_incremental_index", "x_index_compaction",
-    # the READ path that completes the lifecycle (write -> GC ->
-    # serve): BM25 through the base+delta overlay, pinned equal to a
-    # from-scratch reindex of the surviving corpus:
-    "x_index_overlay_search",
-    # the vector twin of that read path: cosine top-3 through the IVF
-    # base + tombstones + the gate's admitted flat buffer, pinned equal
-    # to exact top-k over the surviving corpus:
-    "x_ann_overlay_search",
-    # (b) changed in round 15: the gate's IVF ledger build is the
-    # shared _ensure_ann_ledger (one session geometry for gate and
-    # overlay) — same plan, same ledger bytes, but x_incremental_ann's
-    # source hash flips, and x_ivf_compaction transitively runs the
-    # moved build so it is hand-sentineled per the shared-helper
-    # convention:
-    "x_incremental_ann", "x_ivf_compaction",
-    # x_inverted_index reads the shared _postings helper, and
-    # x_bm25_score / x_rrf_fusion the shared _bm25_term_score
-    # arithmetic (one copy of the DECIMAL(18,8)-pinned formula on both
-    # sides of the oracle boundary) — same plans, hash-identical
-    # output, flipped source hashes:
-    "x_inverted_index", "x_bm25_score", "x_rrf_fusion",
-    # rows-only refresh: the r8-stamped five, the ledger's oldest
-    # stamps; code unchanged, so no sentinel:
-    "d16_approx_count_distinct", "d43_minhash_lsh",
-    "x_ann_ivf_topk", "x_ann_lsh_topk", "x_simhash_neardup",
-    # (b) changed since the round-16 window: the cogroup's bucket count
-    # derives from input bytes, floored at the shuffle partitions (was
-    # a fixed 1,024 — per-bucket Python dispatch was the query's cost);
-    # hash-identical at sf0.001/sf0.01:
-    "x_cogroup_reconcile",
-    # the flagship's tasker step is the tasker verb's own rule
-    # (create_tasks with no existing tasks), so the empty LogicalRDD
-    # ledger the optimizer could not prune is gone; hash-identical at
-    # sf0.001/sf0.01:
-    "d50_pipeline_flagship",
-    # (b) changed in round 15 — _min_label_cc gained a failure-path
-    # guard + comment; per the shared-helper convention its callers
-    # are ledger-sentineled by hand and the driver re-proves them:
-    "x_cluster_label_update", "x_dedup_clusters",
-    "x_dedup_report", "x_neardup_survivors",
-    # (b) changed in round 15: the streaming stateful family's fn
-    # sources changed when _run_to_memory gained the input-derived
-    # state-partition pin (spark_optimization_guide §2 —
-    # scale-adaptive partitioning; results are partition-count
-    # invariant and the oracles re-prove it):
-    "x_stream_outer_join", "x_stream_session_timeout",
-    "x_stream_stateful_counts", "x_stream_static_join",
-    "x_stream_stream_join", "x_stream_tws_counts",
-    "x_stream_tws_sessions", "x_stream_upsert",
-    # (b) changed in round 15: the winnowing selection runs ONCE
-    # (explode carries n_grams; shared-fp counts via count-over-window
-    # by fp instead of the aggregate-then-self-join — guide §2.4),
-    # hash-identical at sf0.001/sf0.01:
-    "x_winnowing_fingerprint",
-    # the same §2.4 restructure for the 5-gram contamination score
-    # (the gram pass ran twice via the broadcast shared-gram join; now
-    # once via count-over-window by g):
-    "x_duplicate_ngram_fraction",
-    # the same single-pass restructure for the rest of the
-    # aggregate-then-join-back family — bigram surprisal counts via
-    # count-over-window by b (+ an explode-free total branch; the
-    # scorer is the shared _surprisal_score since round 17), the two
-    # segment scrubs via min-struct / collect_set-size over seg_text
-    # windows, and the flagship's exact-dup keeper via min-over-window
-    # by content hash. All hash-identical at sf0.001/sf0.01:
-    "x_lm_surprisal_score", "x_segment_dedup_scrub",
-    "x_boilerplate_scrub", "x_corpus_filter_pipeline",
-    # the one-pass cross-source leakage restructure, the CC-loop
-    # job-count cut (x_semdedup rode the same commit — assignment join
-    # dropped), the staged recursive-CTE edge table, and pagerank's
-    # persisted out-degree table. All hash-green at sf0.001/sf0.01
-    # (x_semdedup rows-only, collect-compared at three SFs):
-    "x_cross_source_leakage", "x_pagerank",
-    "x_recursive_cte", "x_semdedup",
-    # second sweep of the §2.4 family: ccnet's embedded surprisal score
-    # (now the shared _surprisal_score, the same scorer
-    # x_lm_surprisal_score runs) and the novelty curve's
-    # first-occurrence join-back. Hash-green at sf0.001/sf0.01:
-    "x_ccnet_buckets", "x_ngram_novelty_curve",
-    # the corners union re-ran the wedge joins (the op's super-linear
-    # term) once per corner column — now one explode over a single tri
-    # evaluation. Hash-green at sf0.001/sf0.01, 3.7x at sf0.1:
-    "x_triangle_count",
-    # (c) backfill oldest-stamp-first in next_window.py's mechanical
-    # order:
-    "x_text_normalize", "x_transpose_stats",
-    "d03_filter", "d04_regex_ext_filter", "d05_distinct",
-    "d06_keyed_dedup", "d07_inner_join",
-    "d40_stream_watermark",
-]
-
-
 def source_hash(q: "Query") -> str:
-    """Mechanical change-detector for the window-coverage guard.
+    """Mechanical change-detector for the driver window.
 
     sha256 over the query fn's own source text plus its oracle SQL.
     tools/oracle_ledger.json records this per query at its last
-    driver-green round; tests/test_registry.py forces any query whose
-    current hash differs (or that has no ledger row) into ``_FRONT_50``.
+    driver-green round; :func:`window_order` forces any query whose
+    current hash differs (or that has no ledger row) into the window.
 
     Known approximation: edits to *shared helpers* a query fn calls do
     not flip its hash — when touching a shared helper, mark its callers
@@ -188,29 +81,69 @@ def source_hash(q: "Query") -> str:
     return hashlib.sha256((src + "\x00" + (q.oracle or "")).encode()).hexdigest()
 
 
-_D_NAME = re.compile(r"^d\d\d_")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LEDGER = os.path.join(REPO, "tools", "oracle_ledger.json")
+WINDOW = 50
 
 
-def _order_key(name: str) -> tuple:
-    if name in _FRONT_50:
-        return (0, _FRONT_50.index(name), "")
-    if _D_NAME.match(name):
-        return (1, 0, name)
-    return (2, 0, name)
+def last_green_rounds(root: str = REPO) -> dict[str, int]:
+    """Query name -> latest round with a green driver row, from the
+    ``CORRECTNESS_r{N}.json`` files in ``root``. Green is hash_match
+    true, or (rows-only ops) err == no_oracle with rows > 0; a later red
+    row demotes."""
+    out: dict[str, int] = {}
+    rounds = sorted(
+        (int(m.group(1)), name)
+        for name in os.listdir(root)
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", name))
+    )
+    for rnd, name in rounds:
+        with open(os.path.join(root, name)) as f:
+            rows = json.load(f)
+        for q, row in rows.items():
+            ok = (row.get("hash_match") is True) or (
+                row.get("err") == "no_oracle" and (row.get("spark_rows") or 0) > 0
+            )
+            if ok:
+                out[q] = rnd
+            else:
+                out.pop(q, None)
+    return out
+
+
+def window_order(
+    registry: dict[str, Query], ledger: dict[str, dict], greens: dict[str, int]
+) -> tuple[list[str], int]:
+    """(every registry name in driver order, number forced) by the rule
+    in the module docstring. More than ``WINDOW`` forced names still
+    yields an order; the caller sees the overflow in the count."""
+    forced, backfill, rest = [], [], []
+    for name, q in sorted(registry.items()):
+        rec = ledger.get(name)
+        if rec is None or rec["hash"] != source_hash(q) or name not in greens:
+            forced.append(name)
+        elif q.oracle is not None:
+            backfill.append((rec["round"], name))
+        else:
+            rest.append(name)
+    backfill.sort()
+    room = max(0, WINDOW - len(forced))
+    head = forced + [n for _, n in backfill[:room]]
+    rest = sorted(rest + [n for _, n in backfill[room:]])
+    return head + rest, len(forced)
+
+
+def driver_order() -> tuple[list[str], int]:
+    """:func:`window_order` over the committed ledger and CORRECTNESS
+    history."""
+    with open(LEDGER) as f:
+        ledger = json.load(f)
+    return window_order(load_all(), ledger, last_green_rounds())
 
 
 def load_all() -> dict[str, Query]:
-    """Import every ops module so its @query decorators run; return REGISTRY.
-
-    The returned dict is re-ordered deterministically: the current-round
-    front window ``_FRONT_50`` first (never-checked ops, then stalest
-    green backfill), then remaining d-ids, then remaining x-ops, so a
-    driver that checks the first 50 entries proves exactly the intended
-    set this round.
-    """
+    """Import every ops module so its @query decorators run; return
+    REGISTRY in registration order."""
     from chyme_spark.ops import analytics, asof, binary, llm, pipeline, relational, scalar, streaming, subqueries, training, udfs, windows  # noqa: F401
 
-    ordered = dict(sorted(REGISTRY.items(), key=lambda kv: _order_key(kv[0])))
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
     return REGISTRY

@@ -558,6 +558,37 @@ try:  # Python Data Source API needs pyspark >= 4.0
     class _SinkCommit(WriterCommitMessage):
         files: list
 
+    def _manifest(path: str) -> list[dict]:
+        """The sink's committed entries ``{batchId, files}``, oldest first."""
+        import json as _json
+
+        manifest = os.path.join(path, "_manifest.jsonl")
+        if not os.path.exists(manifest):
+            return []
+        with open(manifest) as f:
+            return [_json.loads(ln) for ln in f]
+
+    def _publish(path: str, batch_id, messages, overwrite: bool = False) -> None:
+        """The one manifest-commit rule of both writers: publish the
+        staged files of ``messages`` as one manifest line, unless
+        ``batch_id`` (a micro-batch id or a job id) is already there — a
+        replayed or retried commit is a no-op. ``overwrite`` deletes the
+        previously committed files and truncates the manifest in the
+        same step."""
+        import json as _json
+
+        prior = _manifest(path)
+        if any(e["batchId"] == batch_id for e in prior):
+            return
+        if overwrite:
+            for e in prior:
+                for fn in e["files"]:
+                    if os.path.exists(fn):
+                        os.remove(fn)
+        files = sorted(f for m in messages for f in m.files)
+        with open(os.path.join(path, "_manifest.jsonl"), "w" if overwrite else "a") as f:
+            f.write(_json.dumps({"batchId": batch_id, "files": files}) + "\n")
+
     class _JsonlSinkWriter(DataSourceStreamWriter):
         def __init__(self, options: dict):
             self.path = options.get("path")
@@ -583,16 +614,7 @@ try:  # Python Data Source API needs pyspark >= 4.0
             return _SinkCommit(files=[fname])
 
         def commit(self, messages, batchId):
-            import json as _json
-
-            manifest = os.path.join(self.path, "_manifest.jsonl")
-            if os.path.exists(manifest):
-                with open(manifest) as f:
-                    if any(_json.loads(ln)["batchId"] == batchId for ln in f):
-                        return  # replayed micro-batch: already committed
-            files = sorted(f for m in messages for f in m.files)
-            with open(manifest, "a") as f:
-                f.write(_json.dumps({"batchId": batchId, "files": files}) + "\n")
+            _publish(self.path, batchId, messages)
 
         def abort(self, messages, batchId):
             for m in messages:
@@ -628,26 +650,7 @@ try:  # Python Data Source API needs pyspark >= 4.0
             return self._w.write(iterator)
 
         def commit(self, messages):
-            import json as _json
-
-            manifest = os.path.join(self._w.path, "_manifest.jsonl")
-            prior = []
-            if os.path.exists(manifest):
-                with open(manifest) as f:
-                    prior = [_json.loads(ln) for ln in f]
-            if any(e["batchId"] == self.job_id for e in prior):
-                return  # retried commit of this job: already published
-            files = sorted(f for m in messages for f in m.files)
-            if self.overwrite:
-                for e in prior:
-                    for fn in e["files"]:
-                        if os.path.exists(fn):
-                            os.remove(fn)
-                with open(manifest, "w") as f:
-                    f.write(_json.dumps({"batchId": self.job_id, "files": files}) + "\n")
-            else:
-                with open(manifest, "a") as f:
-                    f.write(_json.dumps({"batchId": self.job_id, "files": files}) + "\n")
+            _publish(self._w.path, self.job_id, messages, self.overwrite)
 
         def abort(self, messages):
             self._w.abort(messages, batchId=self.job_id)
@@ -674,14 +677,7 @@ try:  # Python Data Source API needs pyspark >= 4.0
 
     def read_jsonl_sink(spark: SparkSession, path: str, schema: str) -> DataFrame:
         """Read back ONLY the committed (manifest-listed) sink files."""
-        import json as _json
-
-        manifest = os.path.join(path, "_manifest.jsonl")
-        files: list[str] = []
-        if os.path.exists(manifest):
-            with open(manifest) as f:
-                for ln in f:
-                    files.extend(_json.loads(ln)["files"])
+        files = [fn for e in _manifest(path) for fn in e["files"]]
         if not files:
             return spark.createDataFrame([], schema)
         return spark.read.schema(schema).json(files)

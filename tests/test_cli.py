@@ -182,7 +182,7 @@ def test_tasks_table_contains_the_ledger(spark, tmp_path):
     assert _hashes(spark, t / "ledger") <= _hashes(spark, t / "tasks")
 
     (tmp_path / "media" / "more.mov").write_bytes(b"CHYME" + b"m" * 40)
-    common = ["--catalog", f"{t}/catalog", "--ledger", f"{t}/ledger", "--tasks", f"{t}/tasks"]
+    common = ["--catalog", f"{t}/catalog", "--tasks", f"{t}/tasks"]
     assert cli.main(["ingest", str(tmp_path / "media"), "--filter", "ext/mov",
                      "--catalog", f"{t}/catalog"]) == 0  # fmt: skip
     assert cli.main(["tasker"] + common + args[args.index("--mirror-base"):]) == 0
@@ -239,7 +239,7 @@ def test_worker_follow_streams_tasks(spark, tmp_path, capsys):
     (src / "a.mov").write_bytes(b"A" * 100)
     t = tmp_path / "tables"
     common = [
-        "--catalog", f"{t}/catalog", "--ledger", f"{t}/ledger", "--tasks", f"{t}/tasks",
+        "--catalog", f"{t}/catalog", "--tasks", f"{t}/tasks",
     ]
     tasker = common + [
         "--mirror-base", f"file://{t}/mirror", "--executor", "subprocess",
@@ -282,7 +282,7 @@ def test_worker_follow_interval_long_poll(spark, tmp_path, capsys):
     (src / "a.mov").write_bytes(b"A" * 100)
     t = tmp_path / "tables"
     tasker = [
-        "--catalog", f"{t}/catalog", "--ledger", f"{t}/ledger", "--tasks", f"{t}/tasks",
+        "--catalog", f"{t}/catalog", "--tasks", f"{t}/tasks",
         "--mirror-base", f"file://{t}/mirror", "--executor", "subprocess",
         "--cmd", 'for f in "$IN"/*; do wc -c < "$f" > "$OUT/$(basename $f).size"; done',
     ]
@@ -356,6 +356,34 @@ def test_ingest_distributed_listing_catalogs_same_rows(spark, tmp_path):
             cats[mode] = {tuple(r) for r in spark.read.parquet(cat).collect()}
         assert cats["distributed"] == cats["plain"], extra
         assert len(cats["plain"]) == (4 if not extra else 3), extra
+
+
+def test_tasker_takes_no_ledger(spark, tmp_path, capsys):
+    """The tasker anti-joins the tasks table alone, so it is run with
+    the catalog and the tasks table only."""
+    src = tmp_path / "m"
+    src.mkdir()
+    (src / "a.mov").write_bytes(b"A" * 10)
+    t = tmp_path / "tables"
+    assert cli.main(["ingest", str(src), "--filter", "ext/mov", "--catalog", f"{t}/catalog"]) == 0
+    assert cli.main(["tasker", "--catalog", f"{t}/catalog", "--tasks", f"{t}/tasks"]) == 0
+    assert "created 1 tasks" in capsys.readouterr().out
+
+
+def test_s3_option_needs_the_listing_source(tmp_path, capsys):
+    """--s3-option is read only by the chyme_listing source (--follow,
+    --distributed-listing): with the driver listing or a single-object
+    URL nothing would read it, so the verb exits 2 instead of ignoring
+    it; a malformed pair exits 2 on the listing path too."""
+    cat = str(tmp_path / "c")
+    opt = ["--s3-option", "region=us-east-1"]
+    for argv in (
+        [str(tmp_path), "--catalog", cat, *opt],
+        ["s3://bucket/one.mov", "--catalog", cat, *opt],
+        [str(tmp_path), "--catalog", cat, "--distributed-listing", "--s3-option", "region"],
+    ):
+        assert cli.main(["ingest", *argv]) == 2, argv
+        assert "--s3-option" in capsys.readouterr().err, argv
 
 
 def test_status_verb(spark, tmp_path, capsys):
@@ -497,11 +525,10 @@ def test_readme_counts_match_registry():
 def test_queries_md_is_fresh():
     """The committed QUERIES.md must be byte-identical to what the
     generator emits at HEAD — its header promises the first 50 rows
-    are the CURRENT round's driver window, and the r14 self-review
-    caught a commit where the file predated a _FRONT_50 swap (row 1
-    was the previous round's window head). Regenerate with
-    `python tools/gen_queries_md.py` whenever the registry or
-    _FRONT_50 changes."""
+    are the CURRENT driver window (``registry.window_order`` over the
+    oracle ledger and the CORRECTNESS history). Regenerate with
+    `python tools/gen_queries_md.py` whenever the registry, the ledger
+    or a CORRECTNESS file changes."""
     import importlib.util
     import os
 

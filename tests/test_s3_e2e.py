@@ -369,6 +369,24 @@ def test_cli_streaming_ingest_append_only_keys(s3, spark, tmp_path):
     assert names == ["a.mov", "b.mp4"]
 
 
+def test_cli_distributed_listing_ingest_reads_s3_options(s3, spark, tmp_path):
+    """`ingest s3://... --distributed-listing --s3-option ...` hands the
+    endpoint and credentials to the executor-side lister, so the batch
+    verb catalogs the seeded objects from live S3 (no env credentials)."""
+    _endpoint, client, opts = s3
+    objects = _seed_media(client)
+    from chyme_spark import cli
+
+    cat = str(tmp_path / "catalog")
+    args = [
+        "ingest", f"s3://{BUCKET}/media", "--filter", "ext/mov/mp4",
+        "--catalog", cat, "--distributed-listing",
+    ] + [x for k, v in opts.items() for x in ("--s3-option", f"{k}={v}")]
+    assert cli.main(args) == 0
+    urls = sorted(r.url for r in spark.read.parquet(cat).collect())
+    assert urls == sorted(f"s3://{BUCKET}/{k}" for k in objects if not k.endswith(".log"))
+
+
 def test_stream_reader_key_mode_pagination(s3):
     """ContinuationToken is followed across pages (>1000 keys) — the
     reference truncates at one page (pkg/aws/s3.go:354)."""

@@ -146,10 +146,13 @@ def test_ingest_requires_catalog_without_server(tmp_path, capsys):
 
 
 def test_ingest_server_rejects_local_only_flags(tmp_path, capsys):
-    """--follow / --distributed-listing / --catalog are server-side
-    concerns; combining them with --server must be a hard error, not a
-    silent one-shot POST that ignores them."""
-    for extra in (["--follow"], ["--distributed-listing"], ["--catalog", "/tmp/c"]):
+    """--follow / --distributed-listing / --catalog / --s3-option are
+    server-side concerns; combining them with --server must be a hard
+    error, not a silent one-shot POST that ignores them."""
+    for extra in (
+        ["--follow"], ["--distributed-listing"], ["--catalog", "/tmp/c"],
+        ["--s3-option", "region=us-east-1"],
+    ):
         rc = cli.main(["ingest", str(tmp_path), "--server", "http://127.0.0.1:1", *extra])
         assert rc == 2
         assert "--server" in capsys.readouterr().err

@@ -2,10 +2,11 @@
 
 Usage: python tools/gen_queries_md.py [--out QUERIES.md]
 
-Stale-proof documentation: the table is emitted from
-``chyme_spark.registry.load_all()`` (the same source the driver's
-correctness gate consumes), never hand-edited. The first 50 rows ARE
-the current round's driver check window, in order.
+Stale-proof documentation: the table is emitted in
+``chyme_spark.registry.driver_order()`` (the order the driver's
+correctness gate receives from ``__spark_entry__.queries()``), never
+hand-edited. The first 50 rows ARE the current driver check window, in
+order.
 """
 
 from __future__ import annotations
@@ -20,13 +21,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def render() -> tuple[str, int]:
     """(content, query count) for QUERIES.md — shared by the CLI writer
     and the freshness guard in tests/test_cli.py (a regenerated file
-    that differs from the committed one means someone edited the
-    registry or _FRONT_50 without re-running this tool; the r14
-    self-review caught exactly that drift). Returns the count too so
-    main() doesn't re-scan the registry just to print it (ADVICE r14)."""
-    from chyme_spark.registry import load_all
+    that differs from the committed one means the registry, the oracle
+    ledger or the CORRECTNESS history changed without re-running this
+    tool)."""
+    from chyme_spark.registry import driver_order, load_all
 
     reg = load_all()
+    names, _ = driver_order()
     n_oracle = sum(1 for q in reg.values() if q.oracle)
     lines = [
         "# Query inventory",
@@ -34,13 +35,14 @@ def render() -> tuple[str, int]:
         f"Generated by `python tools/gen_queries_md.py` from the registry — "
         f"do not hand-edit. **{len(reg)} queries** "
         f"({n_oracle} DuckDB-oracle hash-checked, {len(reg) - n_oracle} "
-        "rows-only by design). Rows are in registry order: the first 50 are "
-        "the current round's driver correctness window.",
+        "rows-only by design). Rows are in driver order: the first 50 are "
+        "the current driver correctness window.",
         "",
         "| # | query | check | summary |",
         "|---|---|---|---|",
     ]
-    for i, (name, q) in enumerate(reg.items(), 1):
+    for i, name in enumerate(names, 1):
+        q = reg[name]
         kind = "oracle" if q.oracle else "rows-only"
         doc = (q.doc or "").strip().splitlines()[0] if q.doc else ""
         doc = doc.replace("|", "\\|")

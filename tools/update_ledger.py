@@ -1,12 +1,12 @@
 """Refresh tools/oracle_ledger.json — the per-query source-hash ledger
-behind the window-coverage guard (tests/test_registry.py).
+behind the driver window (``chyme_spark.registry.window_order``).
 
 Run this at ROUND START, before editing any operator: at that moment the
 working tree is byte-identical to the snapshot the driver last checked,
 so recording the *current* source hash for every query with a green
 CORRECTNESS row is sound.  During the round, any edit to a query fn or
-its oracle flips the hash, and the guard test forces that query into
-``_FRONT_50`` until a later driver round re-proves it.
+its oracle flips the hash, and the window forces that query into the
+driver's first 50 until a later driver round re-proves it.
 
 Usage:
     python tools/update_ledger.py                 # refresh greens
@@ -15,11 +15,14 @@ Usage:
         # driver-green (e.g. edits to shared helpers the hash can't see,
         # or changes made before the ledger existed)
 
-A query is "driver-green in round N" when its CORRECTNESS_rN row has
-hash_match true, or (rows-only ops) err == no_oracle with rows > 0.
-A later red row demotes.  Queries green at some round keep that round
-number; --mark-changed replaces the hash with a sentinel that can never
-match, so the guard fires until the next green refresh.
+After writing, it prints the window's forced count (exit 1 when it
+overflows the 50-query window).
+
+A query is "driver-green in round N" per
+``chyme_spark.registry.last_green_rounds``. Queries green at some round
+keep that round number; --mark-changed replaces the hash with a
+sentinel that can never match, so the query stays forced until the next
+green refresh.
 """
 
 from __future__ import annotations
@@ -27,33 +30,11 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-LEDGER = os.path.join(REPO, "tools", "oracle_ledger.json")
 SENTINEL = "CHANGED-SINCE-LAST-GREEN"
-
-
-def last_green_rounds() -> dict[str, int]:
-    out: dict[str, int] = {}
-    for path in sorted(os.listdir(REPO)):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        rows = json.load(open(os.path.join(REPO, path)))
-        for name, row in rows.items():
-            ok = (row.get("hash_match") is True) or (
-                row.get("err") == "no_oracle" and (row.get("spark_rows") or 0) > 0
-            )
-            if ok:
-                out[name] = rnd
-            else:
-                out.pop(name, None)  # later red demotes
-    return out
 
 
 def main() -> None:
@@ -70,7 +51,7 @@ def main() -> None:
     changed = {n for n in args.mark_changed.split(",") if n}
     refresh = {n for n in args.refresh.split(",") if n}
 
-    from chyme_spark.registry import load_all, source_hash
+    from chyme_spark.registry import LEDGER, WINDOW, last_green_rounds, load_all, source_hash, window_order
 
     reg = load_all()
     unknown = changed - set(reg)
@@ -98,7 +79,7 @@ def main() -> None:
         elif name in old:
             rec = old[name]  # keep whatever we knew (likely sentinel/new)
         else:
-            continue  # never green, not previously tracked: guard treats as new
+            continue  # never green, not previously tracked: the window forces it
         ledger[name] = rec
 
     with open(LEDGER, "w") as f:
@@ -106,6 +87,10 @@ def main() -> None:
         f.write("\n")
     n_sent = sum(1 for r in ledger.values() if r["hash"] == SENTINEL)
     print(f"ledger: {len(ledger)} entries ({n_sent} sentinel), registry {len(reg)}")
+    _, n_forced = window_order(reg, ledger, greens)
+    print(f"driver window: {n_forced} forced of {WINDOW}")
+    if n_forced > WINDOW:
+        raise SystemExit("forced queries overflow the driver window: split the change")
 
 
 if __name__ == "__main__":
