@@ -26,6 +26,7 @@ config we would never deploy would be gaming the number.
 from __future__ import annotations
 
 import functools
+import hashlib
 import json
 import os
 import sys
@@ -251,32 +252,26 @@ CORE_SCALE = [
     "x_dup_span_scrub", "x_segment_dedup_scrub",
 ]
 
-# Bench-battery rotation (VERDICT r8 #5): ~10 slots per round through
-# the never/stalest-benched registry members. MUST match the current
-# round's entry in tools/bench_ledger.json (tests/test_bench_battery.py
-# asserts the two stay in sync and every member is registered).
-ROTATION = [
-    # round-15 cohort (VERDICT r14 #1/#6, "what's wrong" #2):
-    # new-in-r15 op, timed the round it lands (the x_ivf_compaction
-    # precedent):
-    "x_cluster_label_retract",
-    # VERDICT r14 #6: x_winnowing_fingerprint stays on the scoreboard
-    # so the isolated-probe adjudication has a same-round driver
-    # number to compare against:
-    "x_winnowing_fingerprint",
-    # the four r14 census artifact movers (all adjudicated session
-    # artifacts after idle-host re-measures) get DRIVER-run numbers —
-    # closing the wolf-cry with rotation data rather than another
-    # round of hand re-measures:
-    "x_cross_source_leakage", "x_dataset_card",
-    "x_countmin_sketch", "x_zorder_layout",
-    # the heaviest never-rotated members by the r14 census (none has
-    # ever had a driver-run timing; census medians 2.26s .. 1.14s):
-    "x_market_basket", "x_ngram_novelty_curve",
-    "x_tpch_q16_supplier_count",
-    "x_ann_lsh_topk", "x_interpolate", "x_ccnet_buckets",
-    "x_tpch_q2_min_cost_supplier", "x_partial_agg_merge", "x_cube",
-]
+# Bench-battery rotation: the registry holds ~5x more queries than
+# HEADLINE, so a slow regression in the rest would be invisible. Each
+# round times one cohort of the rest; over ``ceil(len(rest) / 15)``
+# rounds every registered query gets a driver-run timing.
+ROTATION_SLOTS = 15
+
+
+def rotation(registry, round_: int) -> list[str]:
+    """Round ``round_``'s rotation cohort: the registered names outside
+    HEADLINE, ordered by sha1 of the name (so families such as
+    ``x_stream_*`` spread across cohorts), cut into slices of
+    ROTATION_SLOTS; the round takes slice ``round_ % K`` of the K."""
+    fixed = set(HEADLINE)
+    cands = sorted(
+        (n for n in registry if n not in fixed),
+        key=lambda n: hashlib.sha1(n.encode()).hexdigest(),
+    )
+    k = -(-len(cands) // ROTATION_SLOTS)
+    lo = (round_ % k) * ROTATION_SLOTS
+    return cands[lo:lo + ROTATION_SLOTS]
 
 
 def _cpu_calibration() -> float:
@@ -448,11 +443,12 @@ class Runner:
 
 
 _CLIFF = 3.0  # flag a scale probe member when time ratio > _CLIFF * data ratio
+STEADY_PASSES = 5  # timed passes per headline query after the cold one
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from chyme_spark.registry import load_all
+    from chyme_spark.registry import last_green_rounds, load_all
     from chyme_spark.session import get_spark
 
     registry = load_all()
@@ -468,12 +464,11 @@ def main() -> None:
     # steady-state passes: execution with plan/codegen already JIT'd —
     # the per-query number a long-running cluster actually pays. The
     # headline `value` stays the cold pass for round-over-round
-    # comparability. n>=5 passes with per-query MEDIAN (+ spread) so a
-    # host-load wobble on any single pass can't masquerade as a
+    # comparability. STEADY_PASSES passes with per-query MEDIAN (+ spread)
+    # so a host-load wobble on any single pass can't masquerade as a
     # regression: `queries_steady` is the median, `queries_steady_spread`
     # the max-min across passes.
-    n_steady = int(os.environ.get("SPARK_GRAFT_STEADY_PASSES", "5"))
-    passes = [{n: runner.time(n, sf_dir) for n in names} for _ in range(n_steady)]
+    passes = [{n: runner.time(n, sf_dir) for n in names} for _ in range(STEADY_PASSES)]
     steady = {n: round(median([p[n] for p in passes]), 3) for n in names}
     spread = {
         n: round(max(p[n] for p in passes) - min(p[n] for p in passes), 3) for n in names
@@ -489,17 +484,14 @@ def main() -> None:
     # steady medians, then rotation and probe_base medians
     base = dict(steady)
 
-    def rotation() -> dict | None:
-        # HEADLINE is fixed for round-over-round comparability, but the
-        # registry holds ~5x more queries than the battery — a slow
-        # regression in the rest would be invisible. ~10 rotation slots
-        # per round walk the never/stalest-benched members, stamped in
-        # tools/bench_ledger.json. Runs BEFORE the scale probes so a
-        # probe OOM cannot sink it.
-        if os.environ.get("SPARK_GRAFT_ROTATION", "1") == "0":
-            return None
-        members = [n for n in ROTATION if n in registry]
-        blk = {"members": members, "ledger": "tools/bench_ledger.json"}
+    def rotation_block() -> dict:
+        # HEADLINE is fixed for round-over-round comparability; the
+        # rotation times the cohort of the round being benched (the one
+        # after the latest CORRECTNESS_r{N}.json). Runs BEFORE the
+        # scale probes so a probe OOM cannot sink it.
+        round_ = 1 + max(last_green_rounds().values())
+        members = rotation(registry, round_)
+        blk = {"members": members, "round": round_}
         blk.update(runner.block(members, sf_dir))
         base.update(blk["queries_median"])
         return blk
@@ -507,26 +499,20 @@ def main() -> None:
     def probe_base() -> dict | None:
         # probe members with no sf0.1 median in this run yet get a
         # dedicated block, so every scale ratio is apples-to-apples,
-        # never a cross-round comparison. Only when a probe will consume
-        # it: any scale probe enabled AND sf == 0.1.
+        # never a cross-round comparison. Only when the scale probes
+        # will consume it: sf == 0.1.
         needed = [
             n for n in dict.fromkeys(SF1_HEAVY + SF2_SKEW)
             if n in registry and n not in base
         ]
-        probes_on = sf == "0.1" and (
-            os.environ.get("SPARK_GRAFT_SF1", "1") != "0"
-            or os.environ.get("SPARK_GRAFT_SF2", "1") != "0"
-        )
-        if not (needed and probes_on):
+        if not needed or sf != "0.1":
             return None
         blk = {"members": needed}
         blk.update(runner.block(needed, sf_dir))
         base.update(blk["queries_median"])
         return blk
 
-    def scale(
-        members: list[str], factor: int, switch: str, dir_var: str, default_dir: str
-    ) -> dict | None:
+    def scale(members: list[str], factor: int, dir_var: str, default_dir: str) -> dict | None:
         # The 2x gate at sf0.1 cannot see a cost curve that bends far
         # above the data ratio: re-run the heaviest ops at a
         # deterministic ``factor``x scale-up of sf0.1 (chyme_spark.scaleup
@@ -536,7 +522,7 @@ def main() -> None:
         # data ratio. 10x (SF1_HEAVY) probes the heaviest shuffle/explode
         # ops; 20x (SF2_SKEW) doubles every key group again for the
         # skew-sensitive candidate generators.
-        if os.environ.get(switch, "1") == "0" or sf != "0.1":
+        if sf != "0.1":
             return None
         from chyme_spark.scaleup import ensure_scaled
 
@@ -563,7 +549,7 @@ def main() -> None:
         # a genuinely parallel op shows a ratio well above 1 once the
         # work dwarfs fixed overhead.
         sf1 = blocks.get("sf1", {})
-        if os.environ.get("SPARK_GRAFT_CORE_PROBE", "1") == "0" or "queries_median" not in sf1:
+        if "queries_median" not in sf1:
             return None
         high = runner.spark.sparkContext.defaultParallelism
         low = max(2, high // 4)
@@ -593,17 +579,14 @@ def main() -> None:
             **low_blk,
         }
 
-    # membership: the module-scope lists (guarded by test_bench_battery)
+    # membership: the module-scope lists and rotation() (guarded by
+    # test_bench_battery)
     specs = [
-        ("rotation", rotation),
+        ("rotation", rotation_block),
         ("probe_base", probe_base),
-        ("sf1", lambda: scale(
-            SF1_HEAVY, 10, "SPARK_GRAFT_SF1", "SPARK_GRAFT_SF1_DIR", "/tmp/chyme_sf1"
-        )),
+        ("sf1", lambda: scale(SF1_HEAVY, 10, "SPARK_GRAFT_SF1_DIR", "/tmp/chyme_sf1")),
         ("core_scaling", core_scaling),
-        ("sf2", lambda: scale(
-            SF2_SKEW, 20, "SPARK_GRAFT_SF2", "SPARK_GRAFT_SF2_DIR", "/tmp/chyme_sf2"
-        )),
+        ("sf2", lambda: scale(SF2_SKEW, 20, "SPARK_GRAFT_SF2_DIR", "/tmp/chyme_sf2")),
     ]
     blocks: dict[str, dict] = {}
     for key, build in specs:
@@ -631,7 +614,7 @@ def main() -> None:
         "queries_steady": steady,
         "queries_median": steady,  # alias: steady numbers ARE medians now
         "queries_steady_spread": spread,
-        "steady_passes": n_steady,
+        "steady_passes": STEADY_PASSES,
         "steady_total": round(sum(steady.values()), 3),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # single-thread host-speed constant (see _cpu_calibration):

@@ -3773,6 +3773,22 @@ def doc_segments(docs: DataFrame, seg_words: int = 8) -> DataFrame:
     ).select("doc_id", F.col("seg").cast("long").alias("seg"), "seg_text")
 
 
+def _kept_text(keep: Column) -> Column:
+    """Aggregate over one doc's ``doc_segments`` rows: the segments
+    where ``keep`` holds, rejoined in ``seg`` order ("" when none is
+    kept) — the rebuild both scrubs end on."""
+    return F.coalesce(
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.when(keep, F.struct("seg", "seg_text")))),
+                lambda s: s["seg_text"],
+            ),
+            " ",
+        ),
+        F.lit(""),
+    )
+
+
 def segment_scrub(docs: DataFrame, seg_words: int = 8) -> DataFrame:
     """Core of x_segment_dedup_scrub over any (doc_id, text) DataFrame —
     factored out so property tests can drive it with adversarial
@@ -3798,20 +3814,7 @@ def segment_scrub(docs: DataFrame, seg_words: int = 8) -> DataFrame:
     return (
         joined.groupBy("doc_id")
         .agg(
-            F.coalesce(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.when(kept == 1, F.struct("seg", "seg_text"))
-                            )
-                        ),
-                        lambda s: s["seg_text"],
-                    ),
-                    " ",
-                ),
-                F.lit(""),
-            ).alias("scrubbed_text"),
+            _kept_text(kept == 1).alias("scrubbed_text"),
             F.sum(kept).cast("long").alias("n_kept"),
             F.sum(1 - kept).cast("long").alias("n_removed"),
         )
@@ -4203,31 +4206,23 @@ def boilerplate_scrub(
     # r15 (guide §2.4, the segment_scrub restructure): the former
     # countDistinct aggregate fed a join back onto its own input, so
     # the corpus segment explode ran twice (broadcast build recomputes
-    # its subtree). size(collect_set(doc_id)) over a seg_text window is
-    # the same document frequency computed in place on ONE explode —
-    # the unbounded frame evaluates the set once per partition, and a
-    # partition is one segment's occurrence list (bounded by template
-    # spread, never corpus-sized). Every row still flows to the doc_id
+    # its subtree). The document frequency is computed in place on ONE
+    # explode, over a seg_text window: the doc_id dense rank counts
+    # distinct docs, and its max over the partition is the df. Both
+    # windows ride the one seg_text exchange (the rank's seg_text, doc_id
+    # sort serves the max; a first-row flag over a (seg_text, doc_id)
+    # partition would add a third exchange). Not size(collect_set(doc_id)):
+    # that hands every row of the partition the whole id set, so one hot
+    # segment of 960,000 rows in 30,000 docs ran 12x its control at 20x
+    # (plans/r17/hotkey_20x.md). Every row still flows to the doc_id
     # rollup, so no selective pre-shuffle filter is lost.
+    by_seg = Window.partitionBy("seg_text")
     joined = segs.withColumn(
-        "df", F.size(F.collect_set("doc_id").over(Window.partitionBy("seg_text")))
+        "df", F.max(F.dense_rank().over(by_seg.orderBy("doc_id"))).over(by_seg)
     )
     keep = (F.col("df") < min_df).cast("int")
     return joined.groupBy("doc_id").agg(
-        F.coalesce(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(keep == 1, F.struct("seg", "seg_text"))
-                        )
-                    ),
-                    lambda s: s["seg_text"],
-                ),
-                " ",
-            ),
-            F.lit(""),
-        ).alias("clean_text"),
+        _kept_text(keep == 1).alias("clean_text"),
         F.sum(1 - keep).cast("long").alias("n_boiler"),
         F.count("*").cast("long").alias("n_segs"),
     )

@@ -1,13 +1,9 @@
-"""Bench-battery membership guards (r9 review finding #3), the final
-line's contract, the probe runner's fault isolation, and the census's
-same-scale yardstick.
+"""Bench-battery membership guards (r9 review finding #3), the
+rotation rule, the final line's contract, the probe runner's fault
+isolation, and the census's same-scale yardstick.
 
-bench.py's ROTATION cohort and tools/bench_ledger.json's current-round
-entry are two hand-maintained copies of the same list; and every probe
-membership list filters with `in registry`, which silently drops a
-renamed/deleted query. Both failure modes would quietly corrupt the
-never/stalest-benched targeting the rotation policy depends on — fail
-HERE instead.
+Every probe membership list filters with `in registry`, which silently
+drops a renamed/deleted query — fail HERE instead.
 """
 
 from __future__ import annotations
@@ -23,30 +19,38 @@ bench = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(bench)
 
 
-def _ledger() -> dict:
-    return json.load(open(os.path.join(ROOT, "tools", "bench_ledger.json")))
+def test_rotation_cohorts_partition_the_registry_outside_headline():
+    """The K cohorts of ``bench.rotation`` cover every registered name
+    outside HEADLINE exactly once, at most ROTATION_SLOTS per round, so
+    each is timed once every K rounds; round 17's cohort is computed,
+    not the round-15 list that was pasted in by hand."""
+    from chyme_spark.registry import load_all
 
-
-def test_rotation_matches_current_ledger_entry():
-    led = _ledger()
-    current = max(led["rotations"], key=int)
-    assert led["rotations"][current] == bench.ROTATION, (
-        "bench.py ROTATION and tools/bench_ledger.json rotations"
-        f"[{current!r}] diverged — update BOTH in the same commit"
-    )
-
-
-def test_ledger_core13_is_a_headline_prefix_subset():
-    led = _ledger()
-    missing = [n for n in led["core_13"] if n not in bench.HEADLINE]
-    assert not missing, f"core_13 members missing from HEADLINE: {missing}"
+    registry = load_all()
+    cands = sorted(set(registry) - set(bench.HEADLINE))
+    k = -(-len(cands) // bench.ROTATION_SLOTS)
+    cohorts = [bench.rotation(registry, r) for r in range(k)]
+    assert sorted(n for c in cohorts for n in c) == cands
+    assert all(0 < len(c) <= bench.ROTATION_SLOTS for c in cohorts)
+    assert not set().union(*cohorts) & set(bench.HEADLINE)
+    assert bench.rotation(registry, 17) == bench.rotation(registry, 17 + k)
+    assert bench.rotation(registry, 17) == cohorts[17 % k]
+    pasted_r15 = {
+        "x_cluster_label_retract", "x_winnowing_fingerprint",
+        "x_cross_source_leakage", "x_dataset_card", "x_countmin_sketch",
+        "x_zorder_layout", "x_market_basket", "x_ngram_novelty_curve",
+        "x_tpch_q16_supplier_count", "x_ann_lsh_topk", "x_interpolate",
+        "x_ccnet_buckets", "x_tpch_q2_min_cost_supplier",
+        "x_partial_agg_merge", "x_cube",
+    }
+    assert set(bench.rotation(registry, 17)) != pasted_r15
 
 
 def test_every_battery_member_is_a_registered_query():
     from chyme_spark.registry import load_all
 
     registry = load_all()
-    for list_name in ("HEADLINE", "ROTATION", "SF1_HEAVY", "SF2_SKEW", "CORE_SCALE"):
+    for list_name in ("HEADLINE", "SF1_HEAVY", "SF2_SKEW", "CORE_SCALE"):
         members = getattr(bench, list_name)
         missing = [n for n in members if n not in registry]
         assert not missing, (
@@ -65,20 +69,14 @@ def test_core_scale_members_have_sf1_denominators():
 
 
 def test_rotation_does_not_overlap_the_fixed_battery():
-    overlap = set(bench.ROTATION) & set(bench.HEADLINE)
+    from chyme_spark.registry import last_green_rounds, load_all
+
+    round_ = 1 + max(last_green_rounds().values())
+    overlap = set(bench.rotation(load_all(), round_)) & set(bench.HEADLINE)
     assert not overlap, (
         f"rotation members already in HEADLINE: {sorted(overlap)} — "
         "a rotation slot spent on an always-benched query is wasted"
     )
-
-
-def test_all_ledger_rotation_rounds_name_registered_queries():
-    from chyme_spark.registry import load_all
-
-    registry = load_all()
-    for rnd, members in _ledger()["rotations"].items():
-        missing = [n for n in members if n not in registry]
-        assert not missing, f"ledger round {rnd} names unknown queries: {missing}"
 
 
 def test_final_line_is_bounded_pure_json():
@@ -93,7 +91,7 @@ def test_final_line_is_bounded_pure_json():
         "steady_total_calibrated": 82.0, "n_queries": len(bench.HEADLINE),
         "value": 25.0, "unit": "sec", "sf": 0.1,
         "sf1_ratio_max": 4.7, "sf1_flagged": [], "sf2_ratio_max": 8.1,
-        "sf2_flagged": [], "rotation_n": len(bench.ROTATION),
+        "sf2_flagged": [], "rotation_n": 15,
         "rotation_total": 25.0,
     }
     line = bench.final_line(summary, steady)

@@ -1,17 +1,16 @@
 """One-off full-registry timing census (round 12).
 
-The per-round bench rotation retires the never-benched backlog at ~14
-names/round — ~12 rounds of debt at round 11's count (VERDICT r11,
-"What's missing" #2). This tool records a builder-side timing for EVERY
-registry query in one pass instead: 1 warm + N timed noop-sink runs per
+The per-round bench rotation (``bench.rotation``) times one 15-name
+slice of the non-headline registry per round, so a given query waits up
+to 15 rounds between driver timings. This tool records a builder-side
+timing for EVERY registry query in one pass instead: 1 warm + N timed noop-sink runs per
 query (median), run by bench.py's fault-isolated probe runner, written to
 a JSON artifact (tools/bench_census_r{N}.json).
 
 This is NOT the driver bench and does not replace the rotation's
 3-pass idle-host medians in BENCH_r{N}.json — it is a coarse census so
-that every operator has at least one recorded sf0.1 number and the
-rotation can target genuinely heavy stragglers instead of walking the
-registry alphabetically.
+that every operator has a recent sf0.1 number between its rotation
+slots.
 
 Usage:
     python tools/bench_census.py [--sf DIR] [--passes 2] [--out FILE]
