@@ -46,6 +46,24 @@ def test_rotation_cohorts_partition_the_registry_outside_headline():
     assert set(bench.rotation(registry, 17)) != pasted_r15
 
 
+def test_rotation_matches_current_ledger_entry():
+    """The round the rotation block benches is the one after the newest
+    green round of the oracle ledger (the CORRECTNESS_r{N}.json files),
+    and its cohort is that round's slice of the computed partition."""
+    from chyme_spark.registry import last_green_rounds, load_all
+
+    registry = load_all()
+    current = max(last_green_rounds().values())
+    round_ = 1 + current
+    cands = sorted(set(registry) - set(bench.HEADLINE))
+    k = -(-len(cands) // bench.ROTATION_SLOTS)
+    members = bench.rotation(registry, round_)
+    assert members == [bench.rotation(registry, r) for r in range(k)][round_ % k]
+    assert members == bench.rotation(dict(reversed(list(registry.items()))), round_), (
+        "the cohort must not depend on the registry's load order"
+    )
+
+
 def test_every_battery_member_is_a_registered_query():
     from chyme_spark.registry import load_all
 
@@ -194,3 +212,18 @@ def test_census_adjudicates_only_against_the_same_scale(tmp_path):
     assert prev(str(tmp_path), "sf0.1", before_round=14) == str(tmp_path / "bench_census_r12.json")
     assert prev(str(tmp_path), "sf0.001", before_round=13) is None
     assert prev(str(tmp_path), "sf1") is None
+
+
+def test_all_ledger_rotation_rounds_name_registered_queries():
+    """Every round the oracle ledger has reached, and the one it benches
+    next, rotates only registered queries outside HEADLINE."""
+    from chyme_spark.registry import last_green_rounds, load_all
+
+    registry = load_all()
+    for rnd in range(2 + max(last_green_rounds().values())):
+        members = bench.rotation(registry, rnd)
+        missing = [n for n in members if n not in registry]
+        assert members and not missing, (
+            f"round {rnd} rotation names unregistered queries {missing}"
+        )
+        assert not set(members) & set(bench.HEADLINE)
